@@ -2,7 +2,6 @@ package graft
 
 import graft.ais.{AisIngest, Enrich, FixtureWeatherClient, HttpWeatherClient, WeatherClient}
 import graft.streaming.AisPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Production entry point for the live pipeline (SURVEY.md §3.1).
@@ -33,15 +32,8 @@ object App {
     // per-mode arity: socket/kafka need 4 args, replay 3
     require(Seq("socket", "kafka").exists(args.headOption.contains) && args.length >= 4 ||
       args.headOption.contains("replay") && args.length >= 3, usage)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .appName("graft-ais")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
     // spark-submit provides the master on a cluster; default local otherwise
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder.master(s"local[$cpus]")).getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     if (args(0) == "kafka") {

@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // ambient host load BEFORE the bench contributes its own: the end-of-run
     // load1m mostly measures the bench itself on local[32] (r10's sf1
     // artifact recorded 21.5 and read as "measured under heavy load" when
@@ -13,43 +11,7 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     val cpuStart = HostStat.cpuJiffies()
     val canaryStartMs = HostStat.canaryMs()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r16 (guide §3.1): let AQE rewrite sort-merge to shuffled-hash at
-      // runtime when every post-shuffle partition's map output fits the
-      // advisory partition size — skips both sorts. Measured in-JVM
-      // interleaved A/B (ConfAB, min-of-3/arm): 0.88-1.00x across 9 join
-      // queries at sf1 and 8/10 at sf0.1, no loss past noise. Scale-safe by
-      // construction: the decision is made from RUNTIME partition sizes, so
-      // partitions above the threshold keep sort-merge; the per-task build
-      // is bounded by the same 64m the AQE advisory uses. Env-overridable
-      // ("0" restores pure sort-merge).
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      // r16: size the generated-class cache to the catalog's working set.
-      // Spark's default (100 entries) LRU-thrashes across 227 queries x
-      // several codegen units each, so EVERY pass recompiles EVERY unit
-      // (janino time charged to the query). ABAB full-catalog A/B, canary-
-      // stable window: 127.7/136.5 s (default) vs 85.5/94.8 s (5000) —
-      // 215/225 queries faster, median per-query ratio 0.62. This caches
-      // compiled CODE keyed by generated source (an engine working-set
-      // config, shared across identical subplans), never results; every
-      // run still computes from parquet. Static conf, so set at build time.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev aid for config A/Bs (same contract as TimeQ): OPTIONAL extra confs
-    // from SPARK_GRAFT_CONF ("k=v;k=v"), applied at BUILDER time so static
-    // SQL confs (e.g. codegen cache sizing) take effect in the fresh JVM.
-    // The driver never sets it, so the judged methodology is unchanged.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k.trim, v.trim)
-      })
-    val spark = builder.getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/codegen/session init + parquet footer reads, so the
     // first measured query doesn't absorb ~2s of one-time cost
@@ -205,24 +167,16 @@ object Bench {
     // scaladoc) — bench_check refuses past --max-steal / --max-canary-ms
     val stealPct = HostStat.stealPct(cpuStart, HostStat.cpuJiffies())
     val canaryEndMs = HostStat.canaryMs()
-    // Stamp any session-conf override envs into the artifact (ADVICE r16):
-    // an artifact produced under SPARK_GRAFT_CONF / non-default SHJ_LOCALMAP
-    // / CODEGEN_CACHE was previously indistinguishable from a clean run.
-    // bench_check refuses artifacts whose conf_overrides is non-empty.
+    // Stamp the SPARK_GRAFT_CONF overrides (ADVICE r16), so a dev A/B run
+    // cannot pass as a clean one: bench_check refuses a non-empty list.
     def jstr(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"
         case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
       } + "\""
-    val overrides: Seq[String] =
-      sys.env.get("SPARK_GRAFT_CONF").filter(_.nonEmpty)
-        .map(v => s"SPARK_GRAFT_CONF=$v").toSeq ++
-      sys.env.get("SPARK_GRAFT_SHJ_LOCALMAP").filter(_ != "64m")
-        .map(v => s"SPARK_GRAFT_SHJ_LOCALMAP=$v").toSeq ++
-      sys.env.get("SPARK_GRAFT_CODEGEN_CACHE").filter(_ != "5000")
-        .map(v => s"SPARK_GRAFT_CODEGEN_CACHE=$v").toSeq
+    val overrides = Graft.confOverrides.map { case (k, v) => s"$k=$v" }
     val overridesJson = overrides.map(jstr).mkString("[", ",", "]")
-    val detail = s"""{"metric":"total_detail","value":$totalJson,"unit":"sec","load1m_start":${fmt(load1mStart)},"load1m":${fmt(load1m)},"steal_pct":${fmt(stealPct)},"canary_ms_start":${fmt(canaryStartMs)},"canary_ms_end":${fmt(canaryEndMs)},"runs":$runs,"c2_suspects":${suspects.size},"conf_overrides":$overridesJson,"failed":$failedJson,"isolate_min":${fmt(isolateMin)},"isolate_runs":$isolateRuns,"isolated":$isoJson,"queries":$qsFull,"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"total_detail","value":$totalJson,"unit":"sec","load1m_start":${fmt(load1mStart)},"load1m":${fmt(load1m)},"steal_pct":${fmt(stealPct)},"canary_ms_start":${fmt(canaryStartMs)},"canary_ms_end":${fmt(canaryEndMs)},"runs":$runs,"c2_suspects":${suspects.size},"cpus":${Graft.cpus},"conf_overrides":$overridesJson,"failed":$failedJson,"isolate_min":${fmt(isolateMin)},"isolate_runs":$isolateRuns,"isolated":$isoJson,"queries":$qsFull,"sf":"$sfDir"}"""
     println(detail)
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       java.nio.file.Files.write(java.nio.file.Paths.get(p),

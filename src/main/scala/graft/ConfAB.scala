@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: INTERLEAVED in-JVM A/B of one runtime SQL conf across catalog
   * queries — `runMain graft.ConfAB <sfDir> <conf> <valA> <valB> <q> [...]`.
   *
@@ -19,18 +17,7 @@ object ConfAB {
     val valA = args(2)
     val valB = args(3)
     val names = args.drop(4).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's session baseline (r16) so A/B arms differ ONLY in the
-      // conf under test
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.queries("d9_scalar_count")(spark, dir).count() // warm session
     for (n <- names) {

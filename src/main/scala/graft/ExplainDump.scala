@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: write `.explain("formatted")` output for named catalog queries
@@ -18,25 +17,7 @@ object ExplainDump {
     val names: Seq[String] =
       if (rest.contains("--all")) SparkEntry.catalog.map(_.name)
       else rest.filterNot(_.startsWith("--"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r17: match Bench's session confs so the dumped plans are the plans
-      // the bench actually times (the r16 dumps lacked the SHJ threshold,
-      // so runtime SMJ->SHJ conversions were invisible in plans/)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev aid (same contract as TimeQ/Bench): extra confs for A/B plan dumps
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k.trim, v.trim)
-      })
-    val spark = builder.getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // --exec: execute the query first, so the dumped plan is the FINAL

@@ -100,12 +100,7 @@ object GenScale {
     val fromDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val toDir = if (args.length > 1) args(1) else "/tmp/graft-sf1"
     val mult = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(shufflePartitions = 32)
     spark.sparkContext.setLogLevel("WARN")
     run(spark, fromDir, toDir, mult)
     spark.read.parquet(s"$toDir/lineitem.parquet").count() match {

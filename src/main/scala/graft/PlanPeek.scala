@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print exchange/broadcast counts and plan red flags
   * (CartesianProduct / Expand / SortAggregate / BNLJ) for a set of catalog
   * queries — the quick way to check a new operator's physical shape without
@@ -17,10 +15,7 @@ object PlanPeek {
     "hybrid_search_rrf", "dedup_recall_report")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Graft.session("local[4]", 4)
     val dir = "/root/testdata/sf0.001"
     // default: the newest catalog queries; `--all` sweeps the whole catalog
     // (red-flag hunt); explicit names peek exactly those

@@ -160,12 +160,7 @@ object QueriesDoc {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[2]", 2)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     val total = SparkEntry.catalog.length

@@ -315,13 +315,7 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val root = if (args.nonEmpty) args(0) else "/tmp/graft-scale"
     val mults = Seq(1, 3, 10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(shufflePartitions = 32)
     spark.sparkContext.setLogLevel("WARN")
 
     val queries = Seq("geo_encounters", "session_overlap_join",

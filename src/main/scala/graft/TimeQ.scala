@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual catalog queries warm (3 runs each) at a given
   * scale dir — `runMain graft.TimeQ <sfDir> <query> [<query> ...]`. The
   * per-query numbers in Bench are a full-catalog sweep; this isolates one
@@ -10,26 +8,7 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's join-strategy conf (r16) so TimeQ numbers stay
-      // comparable to bench rows
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev aid for config A/Bs (semicolon-separated k=v pairs): time the same
-    // queries under a candidate conf without a rebuild, e.g.
-    // SPARK_GRAFT_CONF="spark.sql.join.preferSortMergeJoin=false"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k.trim, v.trim)
-      })
-    val spark = builder.getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     // task-metric listener: spill + peak-execution-memory evidence for the
     // constrained-heap rehearsals (spills log at INFO, invisible at WARN —

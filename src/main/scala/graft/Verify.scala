@@ -1,32 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench's session confs (r16/r17) so verify covers the same
-      // join-strategy regime the bench times. NOTE (ADVICE r16): Verify
-      // defaults to 4 cores / 4 shuffle partitions vs Bench's 32, so
-      // post-shuffle partition sizes differ ~8x and AQE's runtime SMJ->SHJ
-      // decision can still diverge per stage — this is value-level oracle
-      // coverage of the same conf regime, not a bitwise plan match.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
-      // the codegen-class cache never changes plans or results, but keeping
-      // the verify session one conf short of the bench session broke the
-      // "verify under the exact bench session" discipline (VERDICT r16 #5)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
+    System.err.println(s"[verify] master=${spark.sparkContext.master} " +
+      s"shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")}")
     new java.io.File(outDir).mkdirs()
     // dev aid (driver never sets it): restrict to a comma-separated name list
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")

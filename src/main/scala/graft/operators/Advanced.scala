@@ -351,7 +351,6 @@ object Advanced {
               ON b.ts_us >= a.ts_us - 3600000000 AND b.ts_us <= a.ts_us
             GROUP BY 1"""),
     (s, dir) => {
-      graft.plans.RangeJoin.register(s)
       Tables.events(s, dir)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_type"))

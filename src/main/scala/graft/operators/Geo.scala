@@ -370,9 +370,11 @@ object Geo {
              FROM eps GROUP BY 1, 2, 3"""),
     (s, dir) => encounterEpisodes(positions(s, dir)))
 
-  /** The episode pipeline on an arbitrary positions frame
-    * (ship/event_id/ts_us/lat/lon) — shared by the catalog entry and the
-    * density-crossover probe ([[graft.DensityProbe]]). */
+  /** The episode pipeline on a positions frame (ship/event_id/ts_us/lat/lon)
+    * — the catalog entry, and the batch reference EncounterEpisodesSpec
+    * holds the streaming twin to. Its density crossover against
+    * [[encounterPairs]] is measured in BENCH_NOTES r14 ("Density-crossover
+    * probe"). */
   private[graft] def encounterEpisodes(p: DataFrame): DataFrame = {
     val repW = Window.partitionBy(col("ship"),
         floor(col("ts_us") / encounterUs).cast("long"))
@@ -412,9 +414,8 @@ object Geo {
         min(col("mk")).as("min_km"))
   }
 
-  /** The exact-twin aggregation on an arbitrary positions frame — the
-    * probe's other arm. */
-  private[graft] def encounterPairs(p: DataFrame): DataFrame =
+  /** The exact-twin aggregation on a positions frame. */
+  private def encounterPairs(p: DataFrame): DataFrame =
     closePairs(p)
       .groupBy(col("ship_a"), col("ship_b"))
       .agg(count(lit(1)).as("n_close"), min(col("d")).as("min_km"))

@@ -166,9 +166,9 @@ object PrefixAgg {
 
   /** The SAME question as NAIVE SQL — count(*) AND an integral sum over a
     * raw inequality join + GROUP BY; [[graft.plans.RewriteRangeAggToPrefix]]
-    * supplies the prefix plan automatically (it registers ahead of the
-    * binning rule, so the aggregate collapses before the join would be
-    * binned). Pins the whole rewrite stack: a user's untouched SQL gets the
+    * supplies the prefix plan automatically (it runs ahead of the binning
+    * rule in [[graft.Graft.optimizerRules]], so the aggregate collapses
+    * before the join would be binned). Pins the whole rewrite stack: a user's untouched SQL gets the
     * output-independent plan, sum included (exact Long prefix sums, NULL for
     * all-NULL windows — the spec forces that leg on synthetic frames). */
   val rangeAggAutoQ = QueryDef(
@@ -183,7 +183,6 @@ object PrefixAgg {
               ON b.ts_us >= a.ts_us - 3600000000 AND b.ts_us <= a.ts_us
             GROUP BY 1"""),
     (s, dir) => {
-      graft.plans.RangeAgg.register(s)
       Tables.events(s, dir)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_type"), col("value"))
@@ -218,7 +217,6 @@ object PrefixAgg {
               ON b.ts_us >= a.ts_us - 3600000000 AND b.ts_us <= a.ts_us
             GROUP BY 1"""),
     (s, dir) => {
-      graft.plans.RangeAgg.register(s)
       Tables.events(s, dir)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_type"), col("value"))
@@ -256,7 +254,6 @@ object PrefixAgg {
               ON b.ts_us >= a.ts_us - 3600000000 AND b.ts_us <= a.ts_us
             GROUP BY 1"""),
     (s, dir) => {
-      graft.plans.RangeAgg.register(s)
       Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
         .createOrReplaceTempView("rat_events")

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge}
 import org.apache.spark.sql.classic.Strategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
@@ -152,20 +152,8 @@ object PushFilterThroughAsOf
   }
 }
 
-/** User-facing API + strategy registration. */
+/** User-facing API. */
 object AsOf {
-
-  /** Idempotently register the planner strategy + optimizer rule on the
-    * session (also injectable at build time via
-    * spark.sql.extensions=graft.plans.GraftExtensions). */
-  def register(spark: SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = strategies :+ AsOfJoinStrategy
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(PushFilterThroughAsOf))
-      spark.experimental.extraOptimizations = opts :+ PushFilterThroughAsOf
-  }
 
   /** As-of join via the custom operator. Right-side columns are re-aliased
     * with `suffix` (fresh exprIds — a self-join of one table would otherwise
@@ -173,7 +161,7 @@ object AsOf {
   def join(leftDf: DataFrame, rightDf: DataFrame, key: String, time: String,
       suffix: String = "_r"): DataFrame = {
     val spark = leftDf.sparkSession
-    register(spark)
+    graft.Graft.installRules(spark) // no-op on a Graft.session session
     val renamed = rightDf.select(rightDf.columns.map(c =>
       col(c).as(c + suffix)): _*)
     val lPlan = GraftExpressionBridge.logicalPlan(leftDf)
@@ -193,15 +181,12 @@ object AsOf {
   * (or `.config(...)` on the builder) makes every custom operator strategy,
   * optimizer rule, and SQL function available without calling
   * [[graft.Graft.init]]. Kept in lockstep with the runtime path by sharing
+  * [[graft.Graft.optimizerRules]], [[graft.Graft.strategies]] and
   * [[graft.Graft.sqlFunctions]]. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    e.injectOptimizerRule(_ => PushFilterThroughAsOf)
-    e.injectOptimizerRule(_ => BlockHaversineJoins)
-    e.injectOptimizerRule(_ => RewriteRangeAggToPrefix) // must precede binning
-    e.injectOptimizerRule(_ => BlockRangeJoins)
-    e.injectPlannerStrategy(_ => DeferredStrategy)
+    graft.Graft.strategies.foreach(s => e.injectPlannerStrategy(_ => s))
+    graft.Graft.optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))
     graft.Graft.sqlFunctions.foreach { case (name, n, build) =>
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),

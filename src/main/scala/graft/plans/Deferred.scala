@@ -95,13 +95,6 @@ object DeferredExec {
 
 object Deferred {
 
-  /** Idempotently install the planner strategy (mirrors [[AsOf.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(DeferredStrategy))
-      spark.experimental.extraStrategies = strategies :+ DeferredStrategy
-  }
-
   /** A lazy DataFrame with a known schema whose content is built by `build`
     * on first execution; the build is memoized per planned instance, so
     * re-executing one materialized plan does not re-run the builder (a fresh
@@ -109,7 +102,7 @@ object Deferred {
     * view's result if that matters). */
   def dataFrame(spark: SparkSession, schema: StructType,
       build: () => DataFrame): DataFrame = {
-    register(spark)
+    graft.Graft.installRules(spark) // no-op on a Graft.session session
     val attrs = schema.map(f =>
       AttributeReference(f.name, f.dataType, f.nullable)())
     GraftExpressionBridge.ofRows(spark, DeferredResultPlan(attrs, build))

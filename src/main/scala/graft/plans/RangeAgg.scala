@@ -325,19 +325,3 @@ object RewriteRangeAggToPrefix extends Rule[LogicalPlan] with PredicateHelper {
     grouped.select(outExprs.map(e => GraftExpressionBridge.column(e)): _*)
   }
 }
-
-object RangeAgg {
-  /** Install the prefix rewrite AHEAD of [[BlockRangeJoins]] (order matters:
-    * once the join is binned the aggregate shape above it no longer matches)
-    * plus the Deferred strategy the produced node plans through. Idempotent;
-    * [[RangeJoin.register]] delegates here so every session that can bin a
-    * range join can also collapse an aggregated one. */
-  def register(spark: SparkSession): Unit = {
-    Deferred.register(spark)
-    val opts = spark.experimental.extraOptimizations
-    val base = opts.filterNot(o =>
-      o == RewriteRangeAggToPrefix || o == BlockRangeJoins)
-    spark.experimental.extraOptimizations =
-      base ++ Seq(RewriteRangeAggToPrefix, BlockRangeJoins)
-  }
-}

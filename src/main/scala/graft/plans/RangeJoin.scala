@@ -46,7 +46,8 @@ import org.apache.spark.sql.types._
   * bin's whole candidate product lands in ONE shuffle task and the stage
   * time degenerates to the hot task (measured on a planted 15%-hot-bin
   * corpus: 262.3 s unsalted vs 89.2 s salted at S=8 — 2.9x, hot task cut
-  * 3.0x, identical output; see SaltProbe + BENCH_NOTES r14). Since r15 the
+  * 3.0x, identical output; see BENCH_NOTES r14, "bin-salting
+  * experiment"). Since r15 the
   * rule fires that lever ITSELF: at rewrite time it runs one cheap per-bin
   * candidate-mass aggregate over the two children (a 1-column scan each,
   * Bernoulli-sampled past `spark.graft.autoSalt.probe.targetRows` rows and
@@ -462,8 +463,9 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
                     EqualTo(ps.toAttribute, saltAttr))), hint))
             case (Some(SaltChoice(s, false)), _) =>
               // Inner only: per-row salt on the exploding right (2x total),
-              // all-S explode on the single-bin left (S x) — the SaltProbe
-              // arrangement, cheaper when the right side is the bigger one
+              // all-S explode on the single-bin left (S x) — the arrangement
+              // measured in BENCH_NOTES r14, cheaper when the right side is
+              // the bigger one
               val ps = Alias(Pmod(
                 new XxHash64(saltHashInput(r.output, rightVar), 42L),
                 Literal(s.toLong)), s"${Marker}_ps")()
@@ -482,13 +484,4 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
         case None => j
       }
   }
-}
-
-object RangeJoin {
-  /** Idempotently install the range-join rewrites (mirrors
-    * [[SpatialJoin.register]]; also injected build-time by
-    * [[GraftExtensions]]). Delegates to [[RangeAgg.register]] so the
-    * prefix-aggregate collapse always sits AHEAD of the binning rule —
-    * an aggregated range join must match before its join is binned. */
-  def register(spark: SparkSession): Unit = RangeAgg.register(spark)
 }

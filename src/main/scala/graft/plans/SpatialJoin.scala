@@ -46,7 +46,8 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DateType, DoubleType
   *
   * Like the range rule's bins, the cells are SEMANTIC (1-degree grid), so
   * a port city's cell can hold most of the candidate mass and serialize
-  * the stage in one task. GeoSaltProbe measured the lever on this exact
+  * the stage in one task. BENCH_NOTES r15 ("geo (hb, cy, cx) salting")
+  * measured the lever on this exact
   * key shape: a planted 92-93% hot cell cut 2.4x wall / 2.7-3.3x hot task
   * at sf1/sf10, while on the natural corpus salting LOSES 43% at sf10 —
   * so, as with the range rule, the lever must be trigger-gated, never a
@@ -59,8 +60,8 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DateType, DoubleType
   * explicit `autoSalt.factor` pins it — measured on both rules, BENCH_NOTES
   * r16, and not covered by AQE's partition-level skew splitting, which the
   * range twin's A/B shows never splits a hot semantic KEY). Arrangements mirror
-  * the measured probe: Inner uses GeoSaltProbe's (left explodes all S
-  * salts, the cell-exploding right carries one deterministic per-row
+  * the measured probe: Inner uses the BENCH_NOTES r15 one (left explodes
+  * all S salts, the cell-exploding right carries one deterministic per-row
   * `pmod(xxhash64(<atomic cols>), S)`); Semi/Anti flip it so the left
   * stays physically unique. A qualifying pair still meets exactly once
   * (one cell row x one salt row).
@@ -366,7 +367,7 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
                   Project(j.output,
                     Join(leftKeyed, rightExp, jt, Some(And(cond, eqs)), hint))
                 case Some(SpatialChoice(s, false)) =>
-                  // the measured GeoSaltProbe arrangement (Inner only):
+                  // the arrangement measured in BENCH_NOTES r15 (Inner only):
                   // single-cell left explodes all S salts, the
                   // cell-exploding right carries one deterministic
                   // per-row salt
@@ -407,15 +408,5 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
           }
         case _ => j
       }
-  }
-}
-
-object SpatialJoin {
-  /** Idempotently install the rewrite (mirrors [[AsOf.register]]; also
-    * injected build-time by [[GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(BlockHaversineJoins))
-      spark.experimental.extraOptimizations = opts :+ BlockHaversineJoins
   }
 }

@@ -91,4 +91,20 @@ class CatalogSpec extends SparkSpec {
       assert(n > 0 || emptyOk(q.name), s"${q.name} returned 0 rows")
     }
   }
+
+  test("the session's rule set is fixed at build time: building and running " +
+      "the whole catalog installs no rule or strategy") {
+    val s = Graft.session("local[4]", 4)
+    val opts = s.experimental.extraOptimizations
+    val strategies = s.experimental.extraStrategies
+    assert(opts.filter(Graft.optimizerRules.contains) == Graft.optimizerRules)
+    assert(strategies.filter(Graft.strategies.contains) == Graft.strategies)
+    assert(opts.indexOf(plans.RewriteRangeAggToPrefix) <
+      opts.indexOf(plans.BlockRangeJoins), opts)
+    SparkEntry.catalog.foreach { q =>
+      q.run(s, sf("sf0.001")).count()
+      assert(s.experimental.extraOptimizations == opts, s"after ${q.name}")
+      assert(s.experimental.extraStrategies == strategies, s"after ${q.name}")
+    }
+  }
 }

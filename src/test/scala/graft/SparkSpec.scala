@@ -4,15 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session per suite (one JVM-wide session under the hood —
-  * getOrCreate — so suites don't pay repeated startup). */
+  * getOrCreate — so suites don't pay repeated startup), built by the same
+  * [[Graft.session]] every main uses. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4)
 
   def sf(dir: String): String = s"/root/testdata/$dir"
 }

@@ -239,7 +239,6 @@ class PropertySpec extends SparkSpec {
   test("property: BlockRangeJoins rewrite equals the naive plan on random data") {
     import org.scalacheck.Gen
     import spark.implicits._
-    graft.plans.RangeJoin.register(spark)
     // timestamps straddling zero, several window widths, duplicates allowed
     val gen = Gen.chooseNum(-5000L, 5000L)
     for ((window, seed) <- Seq((700L, 31L), (1000L, 32L), (3L, 33L))) {

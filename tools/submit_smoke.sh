@@ -25,9 +25,15 @@ sbt -batch package
 JAR=target/scala-2.13/redpandaaisdemospark_2.13-0.1.0.jar
 test -f "$JAR"
 rm -rf "$OUT"
+LOG="$OUT.log"
 SPARK_GRAFT_VERIFY_ONLY="$SUBSET" /opt/spark/bin/spark-submit \
   --class graft.Verify --master 'local[8]' \
   --conf spark.sql.shuffle.partitions=8 \
-  "$JAR" "$SF_DIR" "$OUT"
+  "$JAR" "$SF_DIR" "$OUT" 2>&1 | tee "$LOG"
+# Graft.session must keep the launcher's master and confs, not its defaults
+grep -qF '[verify] master=local[8] shuffle.partitions=8' "$LOG" || {
+  echo "submit_smoke: session did not run on spark-submit's --master" >&2
+  exit 1
+}
 ORACLE_ONLY="$SUBSET" python3 tools/oracle_check.py "$SF_DIR" "$OUT"
 echo "submit_smoke: OK ($SUBSET @ $SF_DIR)"
