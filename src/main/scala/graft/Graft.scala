@@ -61,6 +61,12 @@ object Graft {
       // config, shared across identical subplans), never results; every
       // run still computes from parquet. Static conf, so set at build time.
       "spark.sql.codegen.cache.maxEntries" -> "5000",
+      // Offset-log, commit-log and state-store writes that fork no
+      // processes on `file:` checkpoints (Spark's default forks about ten
+      // per micro-batch per query without the Hadoop native library);
+      // other schemes keep Spark's own manager.
+      streaming.LocalCheckpointFileManager.ConfKey ->
+        classOf[streaming.LocalCheckpointFileManager].getName,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false")
     val builder = SparkSession.builder().appName("graft")

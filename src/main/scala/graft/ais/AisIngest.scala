@@ -61,23 +61,20 @@ object AisIngest {
     (tagged.flatMap(_._1), tagged.flatMap(_._2))
   }
 
-  /** A6: nav-status code → name with NotReported default (producer:41-45). */
-  private def statusName = {
-    val byCode = AisDecoder.navStatusNames.zipWithIndex
-      .foldLeft(when(lit(false), ""))( { case (w, (name, code)) =>
-        w.when(col("status") === code, name)
-      })
-    byCode.otherwise("NotReported")
-  }
+  /** A6: a code → name lookup as one array literal indexed by the code
+    * column: `get` answers null past either end of the array, and a null
+    * code stays null, so both fall to `NotReported`. One array read per row
+    * instead of a CASE WHEN chain that every micro-batch re-plans and
+    * re-generates code for. */
+  private def lookup(names: Seq[String], code: String) =
+    coalesce(get(typedLit(names), col(code)), lit("NotReported"))
 
-  /** A6 variant for ship types (producer:79-83). */
-  private def shipTypeNameCol = {
-    val entries = (0 to 99).map(c => c -> AisDecoder.shipTypeName(c))
-      .filter(_._2 != "NotReported")
-    entries.foldLeft(when(lit(false), "")) { case (w, (code, name)) =>
-      w.when(col("shiptype") === code, name)
-    }.otherwise("NotReported")
-  }
+  /** Nav-status names, codes 0-15 (producer:41-45). */
+  private def statusName = lookup(AisDecoder.navStatusNames, "status")
+
+  /** Ship-type names, codes 0-99 (producer:79-83). */
+  private def shipTypeNameCol =
+    lookup((0 to 99).map(AisDecoder.shipTypeName), "shiptype")
 
   /** Position branch: A3 tag-block filter, A5 router (types 1|3|18), A6 enum
     * default, A7 range filter (producer:54-61), A8 projection + nest. */

@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sample}
 import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit}
@@ -117,13 +119,18 @@ private[graft] object ProbeUtil {
       return false
     }
     val rpkMin = flag("rowsPerKeyMin", "64").toDouble
-    val stats = left.select(leftBin.cast("long").as("bin"), lit(0).as("side"))
-      .unionByName(
-        right.select(rightBin.cast("long").as("bin"), lit(1).as("side")))
-      .groupBy(col("side"))
-      .agg(count(lit(1)).as("rows"), approx_count_distinct(col("bin")).as("bins"))
-      .collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    // a failed probe means "no hint", never a failed query
+    val stats = try {
+      left.select(leftBin.cast("long").as("bin"), lit(0).as("side"))
+        .unionByName(
+          right.select(rightBin.cast("long").as("bin"), lit(1).as("side")))
+        .groupBy(col("side"))
+        .agg(count(lit(1)).as("rows"), approx_count_distinct(col("bin")).as("bins"))
+        .collect()
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    } catch {
+      case NonFatal(_) => return false
+    }
     val (lRows, lBins) = stats.getOrElse(0, (0L, 1L))
     val (rRows, rBins) = stats.getOrElse(1, (0L, 1L))
     def width(df: DataFrame) =

@@ -65,6 +65,37 @@ class PipelineSpec extends SparkSpec {
     assert(by("257000002") == "NotReported")
   }
 
+  test("A6: status and ship-type lookups give the decoder's names for every " +
+      "code, NotReported for null, and plan no CASE WHEN") {
+    import spark.implicits._
+    // event i carries code i of the list; its heading (positions) or
+    // timestamp (info) carries i, so each output row maps back to its code
+    val statusCodes = None +: (-1 to 20).map(Some(_))
+    val typeCodes = None +: (-1 to 300).map(Some(_))
+    def ev(t: Int, i: Int, status: Option[Int], shiptype: Option[Int]) =
+      DecodedAis(t, "1", Some(i.toLong), status, Some(60.0), Some(5.0),
+        Some(10.0), Some(i), Some("S"), Some("C"), shiptype, Some("D"))
+    def expected(codes: Seq[Option[Int]], f: Int => String) =
+      codes.zipWithIndex.map { case (c, i) =>
+        i -> c.map(f).getOrElse("NotReported") }.toMap
+
+    val pos = AisIngest.positions(spark.createDataset(
+      statusCodes.zipWithIndex.map { case (c, i) => ev(1, i, c, None) }))
+    assert(pos.collect().map(p => p.heading -> p.status).toMap ==
+      expected(statusCodes, AisDecoder.navStatusName))
+    val info = AisIngest.shipInfo(spark.createDataset(
+      typeCodes.zipWithIndex.map { case (c, i) => ev(5, i, None, c) }))
+    assert(info.collect().map(s => s.timestamp.toInt -> s.shiptype).toMap ==
+      expected(typeCodes, AisDecoder.shipTypeName))
+
+    Seq(pos.queryExecution, info.queryExecution).foreach { qe =>
+      val plan = qe.optimizedPlan
+      assert(!plan.exists(_.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.CaseWhen]))),
+        plan.treeString)
+    }
+  }
+
   test("A8/A9: nested location struct and info projection") {
     val p = positions.filter(_.mmsi == "257000002").head()
     assert(math.abs(p.location.lat - 59.50) < 1e-5)

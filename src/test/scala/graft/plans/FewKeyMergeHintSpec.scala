@@ -47,6 +47,19 @@ class FewKeyMergeHintSpec extends SparkSpec {
     }
   }
 
+  test("a failing probe means no hint, not a failed query") {
+    val few = binnedDf(20000, 8)
+    val poison = expr("raise_error('probe failure')")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      // counterfactual: the same probe job does fail
+      intercept[Exception](few.select(poison.cast("long")).collect())
+      assert(!ProbeUtil.preferMergeFewKeys(few, few, poison, expr(s"t div ${W}L")))
+      // and the gate still fires on the same sides with a working bin column
+      assert(ProbeUtil.preferMergeFewKeys(few, few,
+        expr(s"t div ${W}L"), expr(s"t div ${W}L")))
+    }
+  }
+
   test("gate fires on few-key sides past the broadcast threshold, declines " +
       "on many-key sides of the same size") {
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
