@@ -282,6 +282,14 @@ object Curation {
 
   // ---- product-quantization ANN --------------------------------------------
 
+  /** A PQ codebook shape: `m` subspaces of `subDim` dims, `codebookK`
+    * centroids per subspace. */
+  final case class PqShape(m: Int, subDim: Int, codebookK: Int)
+
+  /** The one shape every shipped PQ path trains: ann_pq_adc, ann_ivf_pq
+    * and the recall report's pq legs (which share one reconstruction). */
+  val Pq = PqShape(m = 16, subDim = 4, codebookK = 64)
+
   /** PQ-ADC approximate nearest neighbors — the third ANN scale path beside
     * LSH ([[Similarity.annLsh]]) and IVF ([[Similarity.annIvf]]): vectors are
     * encoded as M nearest-sub-centroid codes against a per-subspace codebook
@@ -385,9 +393,9 @@ object Curation {
   val pqQ = QueryDef(
     "ann_pq_adc",
     "approximate top-10 neighbors via product-quantization ADC (16x4 codebook)",
-    Some(pqOracle(m = 16, subDim = 4, codebookK = 64, k = 10)),
-    (s, dir) => pqAdc(Tables.embeddings(s, dir), m = 16, subDim = 4,
-      codebookK = 64, k = 10))
+    Some(pqOracle(Pq.m, Pq.subDim, Pq.codebookK, k = 10)),
+    (s, dir) => pqAdc(Tables.embeddings(s, dir), Pq.m, Pq.subDim,
+      Pq.codebookK, k = 10))
 
   // ---- IVF + PQ: the composed billion-scale ANN layout ---------------------
 
@@ -483,10 +491,10 @@ object Curation {
   val ivfPqQ = QueryDef(
     "ann_ivf_pq",
     "IVF-PQ: 3-probe √n coarse cells + PQ-ADC rank (the FAISS-style composition)",
-    Some(ivfPqOracle(stride = Similarity.sqrtStrideSql, nProbe = 3, m = 16,
-      subDim = 4, codebookK = 64, k = 10)),
+    Some(ivfPqOracle(stride = Similarity.sqrtStrideSql, nProbe = 3, Pq.m,
+      Pq.subDim, Pq.codebookK, k = 10)),
     (s, dir) => ivfPqSqrt(Tables.embeddings(s, dir), nProbe = 3,
-      m = 16, subDim = 4, codebookK = 64, k = 10))
+      Pq.m, Pq.subDim, Pq.codebookK, k = 10))
 
   // ---- ANN recall report: the quality gate over every approximate path ----
 
@@ -519,29 +527,19 @@ object Curation {
     // pass runs twice (the dedup_recall_report pattern)
     val exact = Similarity.annBruteForce(queries, e, k)
       .select(col("q_id"), col("vec_id")).cache()
-    // r17: the pq_adc and ivf_pq legs train IDENTICAL (16, 4, 64)
-    // codebooks — one cached reconstruction can serve both instead of
-    // running the explode→argmin→reassemble pipeline twice. Conf-gated so
-    // the sharing is adjudicable interleaved in one JVM (ConfAB; the
-    // sequential-process wall numbers are untrustworthy on this host).
-    val share = e0.sparkSession.conf
-      .getOption("spark.graft.ann.shareRecon").forall(_ == "true")
-    val recon =
-      if (share) pqReconstruct(e, 16, 4, 64).cache()
-      else null
+    // the pq_adc and ivf_pq legs train the IDENTICAL `Pq` codebooks, so
+    // one cached reconstruction serves both instead of running the
+    // explode→argmin→reassemble pipeline twice (r17 ConfAB, BENCH_NOTES)
+    val recon = pqReconstruct(e, Pq.m, Pq.subDim, Pq.codebookK).cache()
     val cNorm = Similarity.withNorm(e)
     val methods: Seq[(String, DataFrame)] = Seq(
       // ivf legs mirror the SHIPPED catalog entries, √n sizing law included
       "ivf_cells" -> Similarity.annIvfSqrt(queries, e, nProbe = 3, k = k),
-      "ivf_pq" -> (if (share) {
-        ivfPqCents(cNorm, Similarity.coarseCentroidsSqrt(cNorm),
-          recon, nProbe = 3, k = k)
-      } else ivfPqSqrt(e, nProbe = 3, m = 16, subDim = 4,
-        codebookK = 64, k = k)),
+      "ivf_pq" -> ivfPqCents(cNorm, Similarity.coarseCentroidsSqrt(cNorm),
+        recon, nProbe = 3, k = k),
       "lsh_bucketed" -> Similarity.annLsh(queries, e, numPlanes = 6, k = k,
         dim = 64),
-      "pq_adc" -> (if (share) pqAdcFromRecon(e, recon, k)
-        else pqAdc(e, m = 16, subDim = 4, codebookK = 64, k = k)),
+      "pq_adc" -> pqAdcFromRecon(e, recon, k),
       "truncated_rerank" -> Similarity.annTruncatedRerank(queries, e,
         prefixDim = 16, candK = 100, k = k))
     val reported = methods.map { case (nm, df) =>

@@ -383,22 +383,11 @@ object Geo {
       .withColumn("rn", row_number().over(repW))
       .filter(col("rn") === 1)
       .select(col("ship"), col("ts_us"), col("lat"), col("lon"))
-    val det0 = closePairs(reps)
+    val bins = closePairs(reps)
       .select(col("ship_a"), col("ship_b"),
         floor(least(col("ts_a"), col("ts_b")) / encounterUs).cast("long").as("dhb"),
         col("d"))
-    // dev A/B lever (VERDICT r16 #5): repartitioning the raw detections by
-    // (ship_a, ship_b) BEFORE the bins aggregate lets the agg, both windows
-    // and the final rollup share ONE exchange (subset clustering satisfies
-    // all of them) — but that one exchange carries FULL detection rows,
-    // where the default shape's two exchanges carry partially-aggregated
-    // bins. Defaults to the shipped shape; the flag exists so the r16
-    // shape-based rejection is MEASURED (see OPTIMIZATION_r17.md).
-    val det = if (det0.sparkSession.conf.getOption(
-        "spark.graft.geo.episodes.repartitionPairs").contains("true")) {
-      det0.repartition(col("ship_a"), col("ship_b"))
-    } else det0
-    val bins = det.groupBy(col("ship_a"), col("ship_b"), col("dhb"))
+      .groupBy(col("ship_a"), col("ship_b"), col("dhb"))
       .agg(count(lit(1)).as("nc"), min(col("d")).as("mk"))
     val pw = Window.partitionBy(col("ship_a"), col("ship_b")).orderBy(col("dhb"))
     val eps = bins

@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
@@ -9,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Generate, HintInfo, Join, Lo
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, sum}
 import org.apache.spark.sql.types._
+
+import ProbeUtil.SaltChoice
 
 /** Optimizer rule that turns a naive trailing-window range join — plain SQL
   * `a JOIN b ON b.ts >= a.ts - C AND b.ts <= a.ts` (BETWEEN desugars to the
@@ -52,9 +52,9 @@ import org.apache.spark.sql.types._
   * candidate-mass aggregate over the two children (a 1-column scan each,
   * Bernoulli-sampled past `spark.graft.autoSalt.probe.targetRows` rows and
   * memoized per child-plan pair + size fingerprint) and, when one bin holds
-  * `>= spark.graft.rangeJoin.autoSalt.hotShareMin` (default 0.05) of the
-  * candidate mass AND `>= skewRatioMin` (default 8) times the uniform
-  * share, emits the salted twin of the binned plan:
+  * `>= 0.05` of the candidate mass AND `>= 8` times the uniform share
+  * ([[ProbeUtil.saltFactor]]), emits the salted twin of the binned plan
+  * ([[ProbeUtil.saltedJoin]]):
   *
   *   - one side carries a deterministic per-row salt
   *     `pmod(xxhash64(<all atomic columns>), S)` — hashed over the ROW,
@@ -84,8 +84,9 @@ import org.apache.spark.sql.types._
   * for Inner the S-fold duplication goes to whichever side the probed row
   * counts say is cheaper (`S*|L| + 2|R|` vs `|L| + 2S*|R|`). The probe is
   * skipped (never failing the query) for plans whose children can't run
-  * standalone (e.g. streaming), and `autoSalt.enabled=false` turns the
-  * whole lever off.
+  * standalone (e.g. streaming), and
+  * `spark.graft.rangeJoin.autoSalt.enabled=false` turns the whole lever
+  * off.
   */
 object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -159,19 +160,11 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
 
   // ---------------------------------------------------------------- salting
 
-  /** S and which side carries the per-row salt (the other explodes S). */
-  private[plans] final case class SaltChoice(s: Int, saltOnLeft: Boolean)
+  private val SaltConf = "spark.graft.rangeJoin.autoSalt"
 
-  /** Re-entrancy guard: the stats probe executes the join's children, whose
-    * own optimization could reach this rule again on a nested range join —
-    * the inner match must not probe recursively. */
-  private val probing = new ThreadLocal[Boolean] {
-    override def initialValue(): Boolean = false
-  }
-
-  /** What the probe measured, conf-independent (thresholds/factor apply at
-    * decision time, so a session changing `autoSalt.*` confs is honored on
-    * a cache hit). `binSpan` = max bin - min bin + 1 over both (sampled)
+  /** What the probe measured, conf-independent (the factor and merge-hint
+    * confs apply at decision time, so a session changing them is honored
+    * on a cache hit). `binSpan` = max bin - min bin + 1 over both (sampled)
     * sides — an upper bound on occupied-key cardinality that, unlike the
     * observed-bin count, does not deflate under sampling; dividing rows by
     * it UNDERestimates rows-per-key, which keeps the r17 merge-hint gate
@@ -179,12 +172,10 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
   private[plans] final case class ProbeStats(
       share: Double, nbins: Long, lRows: Long, rRows: Long, binSpan: Long)
 
-  /** Memoized probe results keyed by the children's semantic hashes PLUS
-    * the planner's size fingerprint (data appended behind an identical
-    * plan re-probes; ADVICE r15): one query is optimized several times
-    * (explain, execute, min-of-2 bench passes) and the probe, while a
-    * single bounded aggregate, is not free. LRU-evicted past 64 entries.
-    * A hash collision can only mis-pick between two CORRECT plans. */
+  /** Probe results per child-plan pair, bin width and side, plus the size
+    * fingerprint: one query is optimized several times (explain, execute,
+    * min-of-2 bench passes) and the probe, while a single bounded
+    * aggregate, is not free. LRU-evicted past 64 entries. */
   private val probes =
     new ProbeUtil.Memo[(Int, Int, Long, Boolean, Long), Option[ProbeStats]](64)
 
@@ -211,78 +202,14 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
   private[plans] def decideSalt(l: LogicalPlan, r: LogicalPlan,
       leftVar: Expression, rightVar: Expression, c: Long, bOnLeft: Boolean,
       jt: JoinType): (Option[SaltChoice], Boolean) = {
-    if (!conf.getConfString(
-        "spark.graft.rangeJoin.autoSalt.enabled", "true").toBoolean ||
-        probing.get()) {
-      return (None, false)
-    }
-    // a broadcastable side means a broadcast hash join, and BHJ has no
-    // stream-side key skew (hot rows probe the broadcast table wherever
-    // they sit in the input splits) — salting there is pure S-fold
-    // overhead (measured on the spatial twin: the sf1 planted A/B planned
-    // BHJ and salting lost 23%, BENCH_NOTES r15). Same size estimate
-    // JoinSelection uses, so the guard mirrors the actual plan choice —
-    // including the join-type asymmetry: Semi/Anti can only BUILD on the
-    // right, so a small LEFT must not suppress the lever there (ADVICE
-    // r15).
-    val bcast = conf.autoBroadcastJoinThreshold
-    val bhj = bcast > 0 && (r.stats.sizeInBytes <= bcast ||
-      (jt == Inner && l.stats.sizeInBytes <= bcast))
-    if (bhj) return (None, false)
-    val sparkOpt = SparkSession.getActiveSession
-    if (sparkOpt.isEmpty) return (None, false)
-    val spark = sparkOpt.get
-    // inside micro-batch planning the streaming side has been substituted
-    // with THIS batch's relation, so the probe would technically run — but
-    // it would run as a blocking job on EVERY trigger against fresh data
-    // (no memo hit), which no per-batch salting win amortizes. Streaming
-    // plans keep the binned rewrite, never the salt (AutoSaltSpec's
-    // streaming case pins it).
-    if (spark.sparkContext.getLocalProperty("sql.streaming.queryId") != null) {
-      return (None, false)
-    }
-    val key = (l.semanticHash(), r.semanticHash(), c, bOnLeft,
-      ProbeUtil.fingerprint(l, r))
-    val stats = probes.get(key).getOrElse {
-      try {
-        val v = probe(spark, l, r, leftVar, rightVar, c, bOnLeft)
-        probes.put(key, v)
-        v
-      } catch {
-        case _: InterruptedException =>
-          // a cancelled planning thread must decline, not die — restore
-          // the flag, don't memoize (the NEXT plan gets a real probe)
-          Thread.currentThread().interrupt()
-          None
-        case NonFatal(_) =>
-          probes.put(key, None)
-          None
+    val stats = ProbeUtil.saltSession(SaltConf, l, r, jt).flatMap { spark =>
+      ProbeUtil.probe(probes, (l.semanticHash(), r.semanticHash(), c,
+          bOnLeft, ProbeUtil.fingerprint(l, r))) {
+        probeBins(spark, l, r, leftVar, rightVar, c, bOnLeft)
       }
     }
-    if (stats.isEmpty) return (None, false)
     val saltOpt = stats.flatMap { st =>
-      val hotMin = conf.getConfString(
-        "spark.graft.rangeJoin.autoSalt.hotShareMin", "0.05").toDouble
-      val ratioMin = conf.getConfString(
-        "spark.graft.rangeJoin.autoSalt.skewRatioMin", "8.0").toDouble
-      // Factor selection (r16, A/B-measured at sf30): adaptive S =
-      // clamp(share x parallelism x 2, 2, 64) beats the fixed r14 knee at
-      // BOTH planted fracs — share 0.15: 66.7 s (S=10) vs 88.0 s (S=8);
-      // share 0.81: 431.9 s (S=53) vs 1050.9 s (S=8, task_max = the whole
-      // stage at 1049 s) — so adaptive is the DEFAULT. An explicitly set
-      // `factor` pins S (factor<=1 disables); an explicit
-      // `factorAuto=true` forces adaptive even when factor is also set.
-      val autoConf = conf.getConfString(
-        "spark.graft.rangeJoin.autoSalt.factorAuto", "")
-      val factorConf = conf.getConfString(
-        "spark.graft.rangeJoin.autoSalt.factor", "")
-      val s =
-        if (autoConf == "true") ProbeUtil.adaptiveFactor(st.share)
-        else if (factorConf.nonEmpty) factorConf.toInt
-        else if (autoConf == "false") 8
-        else ProbeUtil.adaptiveFactor(st.share)
-      if (st.share < hotMin || st.share * st.nbins < ratioMin || s <= 1) None
-      else {
+      ProbeUtil.saltFactor(SaltConf, st.share, st.nbins).map { s =>
         // Semi/Anti need the left physically unique -> per-row salt on
         // left; Inner sends the S-fold duplication to the cheaper side
         val saltOnLeft = jt != Inner ||
@@ -291,7 +218,7 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
         logInfo(s"graft autoSalt: hot bin share=${st.share} over " +
           s"${st.nbins} bins (|L|=${st.lRows} |R|=${st.rRows}) -> " +
           s"salting S=$s saltOnLeft=$saltOnLeft")
-        Some(SaltChoice(s, saltOnLeft))
+        SaltChoice(s, saltOnLeft)
       }
     }
     // r17: few-key merge preference from the SAME probe (only when salting
@@ -299,22 +226,13 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
     // breaks the long chains in the skewed regime). Chains per key: lRows
     // on the single-bin side, 2x rRows on the 2-bin-exploding side, over
     // the span-bounded key count; the min keeps the test conservative (a
-    // short-chain build side makes SHJ fine). Probed actual sizes must
-    // also clear the broadcast threshold so AQE's runtime broadcast
-    // conversion stays available (a merge hint would forbid it).
-    val preferMerge = saltOpt.isEmpty && stats.exists { st =>
-      conf.getConfString(
-        "spark.graft.join.fewKeyMergeHint.enabled", "true").toBoolean && {
-        val rpkMin = conf.getConfString(
-          "spark.graft.join.fewKeyMergeHint.rowsPerKeyMin", "64").toDouble
-        def width(p: LogicalPlan) =
-          math.max(8L, p.output.map(_.dataType.defaultSize.toLong).sum)
-        val rpk = math.min(st.lRows.toDouble, 2.0 * st.rRows) /
-          math.max(1L, st.binSpan)
-        rpk >= rpkMin && (bcast <= 0 ||
-          (st.lRows * width(l) > bcast && st.rRows * width(r) > bcast))
+    // short-chain build side makes SHJ fine).
+    val preferMerge = saltOpt.isEmpty && ProbeUtil.mergeHintEnabled(conf) &&
+      stats.exists { st =>
+        ProbeUtil.mergePreferred(conf,
+          math.min(st.lRows.toDouble, 2.0 * st.rRows) /
+            math.max(1L, st.binSpan), l, st.lRows, r, st.rRows)
       }
-    }
     if (preferMerge) {
       logInfo(s"graft fewKeyMergeHint: ~${stats.get.binSpan} bin keys for " +
         s"|L|=${stats.get.lRows} |R|=${stats.get.rRows} rows -> SHUFFLE_MERGE")
@@ -331,57 +249,34 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
     * per-bin statistic — total/max candidate mass, left-bin count, both
     * row counts — comes out of ONE full-outer assembly and a single
     * aggregate. */
-  private def probe(spark: SparkSession, l: LogicalPlan,
+  private def probeBins(spark: SparkSession, l: LogicalPlan,
       r: LogicalPlan, leftVar: Expression, rightVar: Expression, c: Long,
       bOnLeft: Boolean): Option[ProbeStats] = {
-    probing.set(true)
-    try {
-      val target = conf.getConfString(
-        "spark.graft.autoSalt.probe.targetRows", "1000000").toDouble
-      val (ls, sL) = ProbeUtil.sampled(l, target)
-      val (rs, sR) = ProbeUtil.sampled(r, target)
-      val lb = binCounts(spark, ls, leftVar, c, "nl")
-      val rb = binCounts(spark, rs, rightVar, c, "nr")
-      // a right row in rbin k reaches left-bin keys {k-1,k} (bOnLeft) or
-      // {k,k+1}; fold the adjacent contribution back onto the key's row
-      val shift = if (bOnLeft) 1L else -1L
-      val adj = rb.select((col("bin") - shift).as("bin"), col("nr").as("nr2"))
-      val row = lb.join(rb, Seq("bin"), "full_outer")
-        .join(adj, Seq("bin"), "full_outer")
-        .select(
-          (coalesce(col("nl"), lit(0L)) * (coalesce(col("nr"), lit(0L)) +
-            coalesce(col("nr2"), lit(0L)))).as("mass"),
-          col("nl"), col("nr"), col("bin"))
-        .agg(sum(col("mass")).as("t"), max(col("mass")).as("m"),
-          count(col("nl")).as("n"), sum(col("nl")).as("lr"),
-          sum(col("nr")).as("rr"),
-          min(col("bin")).as("b0"), max(col("bin")).as("b1")).head()
-      if (row.isNullAt(0) || row.getLong(0) <= 0L) None
-      else Some(ProbeStats(
-        row.getLong(1).toDouble / row.getLong(0), row.getLong(2),
-        (row.getLong(3) * sL).toLong, (row.getLong(4) * sR).toLong,
-        if (row.isNullAt(5) || row.isNullAt(6)) 1L
-        else row.getLong(6) - row.getLong(5) + 1L))
-    } finally {
-      probing.set(false)
-    }
+    val (ls, sL) = ProbeUtil.sampled(l)
+    val (rs, sR) = ProbeUtil.sampled(r)
+    val lb = binCounts(spark, ls, leftVar, c, "nl")
+    val rb = binCounts(spark, rs, rightVar, c, "nr")
+    // a right row in rbin k reaches left-bin keys {k-1,k} (bOnLeft) or
+    // {k,k+1}; fold the adjacent contribution back onto the key's row
+    val shift = if (bOnLeft) 1L else -1L
+    val adj = rb.select((col("bin") - shift).as("bin"), col("nr").as("nr2"))
+    val row = lb.join(rb, Seq("bin"), "full_outer")
+      .join(adj, Seq("bin"), "full_outer")
+      .select(
+        (coalesce(col("nl"), lit(0L)) * (coalesce(col("nr"), lit(0L)) +
+          coalesce(col("nr2"), lit(0L)))).as("mass"),
+        col("nl"), col("nr"), col("bin"))
+      .agg(sum(col("mass")).as("t"), max(col("mass")).as("m"),
+        count(col("nl")).as("n"), sum(col("nl")).as("lr"),
+        sum(col("nr")).as("rr"),
+        min(col("bin")).as("b0"), max(col("bin")).as("b1")).head()
+    if (row.isNullAt(0) || row.getLong(0) <= 0L) None
+    else Some(ProbeStats(
+      row.getLong(1).toDouble / row.getLong(0), row.getLong(2),
+      (row.getLong(3) * sL).toLong, (row.getLong(4) * sR).toLong,
+      if (row.isNullAt(5) || row.isNullAt(6)) 1L
+      else row.getLong(6) - row.getLong(5) + 1L))
   }
-
-  /** Per-row salt input: every atomic output column (xxhash64 over the row,
-    * row-unique up to exact duplicates). Falls back to the window endpoint
-    * if a pathological projection leaves no atomic columns. */
-  private def saltHashInput(out: Seq[Attribute], fallback: Expression)
-      : Seq[Expression] = {
-    val atomic = out.filter(a => a.dataType match {
-      case _: NumericType | StringType | BinaryType | BooleanType |
-           DateType | TimestampType | TimestampNTZType => true
-      case _ => false
-    })
-    if (atomic.nonEmpty) atomic else Seq(micros(fallback))
-  }
-
-  private def saltLiterals(s: Int): Seq[Expression] =
-    (0 until s).map(i => Literal(i.toLong))
 
   // ------------------------------------------------------------------ rule
 
@@ -427,10 +322,10 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
           val rightExp = Generate(Explode(CreateArray(candidates)),
             Nil, outer = false, None, Seq(binAttr), r)
           val lbAlias = Alias(floorDiv(micros(leftVar), c), s"${Marker}_l")()
-          val binEq = (la: Alias) => EqualTo(la.toAttribute, binAttr)
+          val leftKeyed = Project(l.output :+ lbAlias, l)
+          val keyCond = And(cond, EqualTo(lbAlias.toAttribute, binAttr))
           decideSalt(l, r, leftVar, rightVar, c, bOnLeft, jt) match {
             case (None, preferMerge) =>
-              val leftKeyed = Project(l.output :+ lbAlias, l)
               // the merge hint pins SortMergeJoin: JoinSelection consults
               // strategy hints before both its size-based broadcast choice
               // and the AQE PREFER_SHUFFLE_HASH rewrite, and
@@ -442,44 +337,17 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
                   hint.rightHint.exists(_.strategy.isDefined)) hint
                 else hint.copy(leftHint = Some(hint.leftHint
                   .getOrElse(HintInfo()).copy(strategy = Some(SHUFFLE_MERGE))))
-              Project(j.output,
-                Join(leftKeyed, rightExp, jt,
-                  Some(And(cond, binEq(lbAlias))), h))
-            case (Some(SaltChoice(s, true)), _) =>
-              // per-row salt left (left stays physically unique: Semi/Anti
-              // safe), all-S explode on the already-exploding right
-              val ps = Alias(Pmod(
-                new XxHash64(saltHashInput(l.output, leftVar), 42L),
-                Literal(s.toLong)), s"${Marker}_ps")()
-              val leftKeyed = Project(l.output :+ lbAlias :+ ps, l)
-              val saltAttr = AttributeReference(s"${Marker}_s", LongType,
-                nullable = false)()
-              val rightSalted = Generate(
-                Explode(CreateArray(saltLiterals(s))),
-                Nil, outer = false, None, Seq(saltAttr), rightExp)
-              Project(j.output,
-                Join(leftKeyed, rightSalted, jt,
-                  Some(And(And(cond, binEq(lbAlias)),
-                    EqualTo(ps.toAttribute, saltAttr))), hint))
-            case (Some(SaltChoice(s, false)), _) =>
-              // Inner only: per-row salt on the exploding right (2x total),
-              // all-S explode on the single-bin left (S x) — the arrangement
-              // measured in BENCH_NOTES r14, cheaper when the right side is
-              // the bigger one
-              val ps = Alias(Pmod(
-                new XxHash64(saltHashInput(r.output, rightVar), 42L),
-                Literal(s.toLong)), s"${Marker}_ps")()
-              val rightSalted = Project(r.output :+ binAttr :+ ps, rightExp)
-              val saltAttr = AttributeReference(s"${Marker}_s", LongType,
-                nullable = false)()
-              val leftKeyed = Generate(
-                Explode(CreateArray(saltLiterals(s))),
-                Nil, outer = false, None, Seq(saltAttr),
-                Project(l.output :+ lbAlias, l))
-              Project(j.output,
-                Join(leftKeyed, rightSalted, jt,
-                  Some(And(And(cond, binEq(lbAlias)),
-                    EqualTo(saltAttr, ps.toAttribute))), hint))
+              Project(j.output, Join(leftKeyed, rightExp, jt, Some(keyCond), h))
+            case (Some(choice), _) =>
+              // per-row salt left: the left stays physically unique
+              // (Semi/Anti safe) and the already-exploding right explodes
+              // all S; per-row salt right (Inner only, the arrangement
+              // measured in BENCH_NOTES r14): cheaper when the right side
+              // is the bigger one
+              ProbeUtil.saltedJoin(Marker, choice, leftKeyed, rightExp,
+                ProbeUtil.saltHashInput(l.output, Seq(micros(leftVar))),
+                ProbeUtil.saltHashInput(r.output, Seq(micros(rightVar))),
+                keyCond, jt, hint, j.output, foldSalt = true)
           }
         case None => j
       }

@@ -1,14 +1,14 @@
 package graft.plans
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, sum}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DateType, DoubleType, LongType, NumericType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
+
+import ProbeUtil.SaltChoice
 
 /** Optimizer rule that turns a naive radius join — plain SQL
   * `a JOIN b ON haversine_km(b.lat, b.lon, a.lat, a.lon) <= r` — into the
@@ -55,12 +55,13 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DateType, DoubleType
   * (L(cell) x R(cell) — a lower bound of true mass, which also counts
   * neighbor cells; a port-hot cell is hot on both sides in the same cell,
   * so the bound detects exactly the regime the lever exists for) and
-  * salts past `spark.graft.spatialJoin.autoSalt.{hotShareMin,skewRatioMin}`
-  * (defaults 0.05 / 8; S defaults to the share-adaptive factor, an
-  * explicit `autoSalt.factor` pins it — measured on both rules, BENCH_NOTES
-  * r16, and not covered by AQE's partition-level skew splitting, which the
-  * range twin's A/B shows never splits a hot semantic KEY). Arrangements mirror
-  * the measured probe: Inner uses the BENCH_NOTES r15 one (left explodes
+  * salts past the range rule's trigger ([[ProbeUtil.saltFactor]]: hot
+  * share 0.05, skew ratio 8; S is the share-adaptive factor unless
+  * `spark.graft.spatialJoin.autoSalt.factor` pins it — measured on both
+  * rules, BENCH_NOTES r16, and not covered by AQE's partition-level skew
+  * splitting, which the range twin's A/B shows never splits a hot semantic
+  * KEY); `spark.graft.spatialJoin.autoSalt.enabled=false` turns the lever
+  * off. Arrangements mirror the measured probe: Inner uses the BENCH_NOTES r15 one (left explodes
   * all S salts, the cell-exploding right carries one deterministic per-row
   * `pmod(xxhash64(<atomic cols>), S)`); Semi/Anti flip it so the left
   * stays physically unique. A qualifying pair still meets exactly once
@@ -122,23 +123,14 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
 
   // ------------------------------------------------------- hot-cell salting
 
-  /** Re-entrancy guard: the stats probe executes the join's children, whose
-    * own optimization could reach this rule again. */
-  private val probing = new ThreadLocal[Boolean] {
-    override def initialValue(): Boolean = false
-  }
+  private val SaltConf = "spark.graft.spatialJoin.autoSalt"
 
   private[plans] final case class CellStats(
       share: Double, ncells: Long, lRows: Long, rRows: Long)
 
-  /** S and which side carries the per-row salt (the other explodes S). */
-  private[plans] final case class SpatialChoice(s: Int, saltOnLeft: Boolean)
-
-  /** Memoized per child-plan pair + size fingerprint (conf thresholds
-    * apply at decision time, so conf changes are honored on a cache hit;
-    * appended data re-probes — ADVICE r15); LRU-evicted past 64 entries.
-    * A semantic-hash collision can only mis-pick between two CORRECT
-    * plans. */
+  /** Probe results per child-plan pair + size fingerprint (the factor conf
+    * applies at decision time, so a change is honored on a cache hit);
+    * LRU-evicted past 64 entries. */
   private val probes =
     new ProbeUtil.Memo[(Int, Int, Long), Option[CellStats]](64)
 
@@ -155,29 +147,22 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
   private def probeCells(spark: SparkSession, l: LogicalPlan,
       r: LogicalPlan, lLat: Expression, lLon: Expression,
       rLat: Expression, rLon: Expression): Option[CellStats] = {
-    probing.set(true)
-    try {
-      val target = conf.getConfString(
-        "spark.graft.autoSalt.probe.targetRows", "1000000").toDouble
-      val (ls, sL) = ProbeUtil.sampled(l, target)
-      val (rs, sR) = ProbeUtil.sampled(r, target)
-      val lc = cellCounts(spark, ls, lLat, lLon, "nl")
-      val rc = cellCounts(spark, rs, rLat, rLon, "nr")
-      val m = lc.join(rc, Seq("cy", "cx"), "full_outer")
-        .select(
-          (coalesce(col("nl"), lit(0L)) *
-            coalesce(col("nr"), lit(0L))).as("mass"),
-          col("nl"), col("nr"))
-        .agg(sum(col("mass")).as("t"), max(col("mass")).as("m"),
-          count(col("nl")).as("n"), sum(col("nl")).as("lr"),
-          sum(col("nr")).as("rr")).head()
-      if (m.isNullAt(0) || m.getLong(0) <= 0L) None
-      else Some(CellStats(
-        m.getLong(1).toDouble / m.getLong(0), m.getLong(2),
-        (m.getLong(3) * sL).toLong, (m.getLong(4) * sR).toLong))
-    } finally {
-      probing.set(false)
-    }
+    val (ls, sL) = ProbeUtil.sampled(l)
+    val (rs, sR) = ProbeUtil.sampled(r)
+    val lc = cellCounts(spark, ls, lLat, lLon, "nl")
+    val rc = cellCounts(spark, rs, rLat, rLon, "nr")
+    val m = lc.join(rc, Seq("cy", "cx"), "full_outer")
+      .select(
+        (coalesce(col("nl"), lit(0L)) *
+          coalesce(col("nr"), lit(0L))).as("mass"),
+        col("nl"), col("nr"))
+      .agg(sum(col("mass")).as("t"), max(col("mass")).as("m"),
+        count(col("nl")).as("n"), sum(col("nl")).as("lr"),
+        sum(col("nr")).as("rr")).head()
+    if (m.isNullAt(0) || m.getLong(0) <= 0L) None
+    else Some(CellStats(
+      m.getLong(1).toDouble / m.getLong(0), m.getLong(2),
+      (m.getLong(3) * sL).toLong, (m.getLong(4) * sR).toLong))
   }
 
   /** Returns the salt factor and arrangement when the hot-cell trigger
@@ -186,70 +171,14 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
     * right side's cell-expansion factor for the Inner side choice. */
   private[plans] def decideSalt(l: LogicalPlan, r: LogicalPlan,
       lLat: Expression, lLon: Expression, rLat: Expression,
-      rLon: Expression, jt: JoinType, rv: Double): Option[SpatialChoice] = {
-    if (!conf.getConfString(
-        "spark.graft.spatialJoin.autoSalt.enabled", "true").toBoolean ||
-        probing.get()) {
-      return None
-    }
-    // a broadcastable side means a broadcast hash join, and BHJ has no
-    // stream-side key skew (hot rows probe the broadcast table wherever
-    // they sit in the input splits) — salting there is pure S-fold
-    // overhead, MEASURED: the sf1 planted-hot-cell A/B planned BHJ and
-    // salting lost 23% (BENCH_NOTES r15). Same size estimate JoinSelection
-    // uses, so the guard mirrors the actual plan choice — including the
-    // join-type asymmetry: Semi/Anti can only BUILD on the right, so a
-    // small LEFT must not suppress the lever there (ADVICE r15).
-    val bcast = conf.autoBroadcastJoinThreshold
-    val bhj = bcast > 0 && (r.stats.sizeInBytes <= bcast ||
-      (jt == Inner && l.stats.sizeInBytes <= bcast))
-    if (bhj) return None
-    val sparkOpt = SparkSession.getActiveSession
-    if (sparkOpt.isEmpty) return None
-    // see the range twin: a probe inside micro-batch planning would run
-    // as a blocking job on EVERY trigger (fresh per-batch relations defeat
-    // the memo) — streaming plans keep the blocked rewrite, never the salt
-    if (sparkOpt.get.sparkContext
-        .getLocalProperty("sql.streaming.queryId") != null) {
-      return None
-    }
-    val key = (l.semanticHash(), r.semanticHash(), ProbeUtil.fingerprint(l, r))
-    val st = probes.get(key).getOrElse {
-      try {
-        val v = probeCells(sparkOpt.get, l, r, lLat, lLon, rLat, rLon)
-        probes.put(key, v)
-        v
-      } catch {
-        case _: InterruptedException =>
-          // a cancelled planning thread must decline, not die — restore
-          // the flag, don't memoize (the NEXT plan gets a real probe)
-          Thread.currentThread().interrupt()
-          None
-        case NonFatal(_) =>
-          probes.put(key, None)
-          None
+      rLon: Expression, jt: JoinType, rv: Double): Option[SaltChoice] =
+    ProbeUtil.saltSession(SaltConf, l, r, jt).flatMap { spark =>
+      ProbeUtil.probe(probes,
+          (l.semanticHash(), r.semanticHash(), ProbeUtil.fingerprint(l, r))) {
+        probeCells(spark, l, r, lLat, lLon, rLat, rLon)
       }
-    }
-    st.flatMap { s =>
-      val hotMin = conf.getConfString(
-        "spark.graft.spatialJoin.autoSalt.hotShareMin", "0.05").toDouble
-      val ratioMin = conf.getConfString(
-        "spark.graft.spatialJoin.autoSalt.skewRatioMin", "8.0").toDouble
-      // Factor selection mirrors the range rule (adaptive default, explicit
-      // factor pins, factorAuto=true forces adaptive) — the range A/B plus
-      // the sf10 spatial transfer A/B are in BENCH_NOTES r16.
-      val autoConf = conf.getConfString(
-        "spark.graft.spatialJoin.autoSalt.factorAuto", "")
-      val factorConf = conf.getConfString(
-        "spark.graft.spatialJoin.autoSalt.factor", "")
-      val factor =
-        if (autoConf == "true") ProbeUtil.adaptiveFactor(s.share)
-        else if (factorConf.nonEmpty) factorConf.toInt
-        else if (autoConf == "false") 8
-        else ProbeUtil.adaptiveFactor(s.share)
-      if (s.share < hotMin || s.share * s.ncells < ratioMin || factor <= 1)
-        None
-      else {
+    }.flatMap { s =>
+      ProbeUtil.saltFactor(SaltConf, s.share, s.ncells).map { factor =>
         // Semi/Anti need the left physically unique -> per-row salt on
         // left. Inner picks the cheaper duplication side (ADVICE r15;
         // mirrors the range rule): exploding S salts on the left costs
@@ -267,26 +196,9 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
         logInfo(s"graft spatial autoSalt: hot cell share=${s.share} over " +
           s"${s.ncells} cells (|L|=${s.lRows} |R|=${s.rRows}) -> " +
           s"S=$factor saltOnLeft=$saltOnLeft")
-        Some(SpatialChoice(factor, saltOnLeft))
+        SaltChoice(factor, saltOnLeft)
       }
     }
-  }
-
-  /** Per-row salt input: all atomic columns (row-unique up to exact
-    * duplicates — never the position alone, so one pier's worth of
-    * identical coordinates still splits). */
-  private def saltHashInput(out: Seq[Attribute], fbLat: Expression,
-      fbLon: Expression): Seq[Expression] = {
-    val atomic = out.filter(a => a.dataType match {
-      case _: NumericType | StringType | BinaryType | BooleanType |
-           DateType | TimestampType | TimestampNTZType => true
-      case _ => false
-    })
-    if (atomic.nonEmpty) atomic else Seq(fbLat, fbLon)
-  }
-
-  private def saltLiterals(s: Int): Seq[Expression] =
-    (0 until s).map(i => Literal(i.toLong))
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case j @ Join(l, r, jt @ (Inner | LeftSemi | LeftAnti), Some(cond), hint)
@@ -359,50 +271,23 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
               val pxAlias = Alias(wrap(Floor(lLon)), s"${Marker}_px")()
               val leftKeyed = Project(
                 l.output ++ Seq(pyAlias, pxAlias), l)
-              val eqs = And(
+              val keyCond = And(cond, And(
                 EqualTo(pyAlias.toAttribute, cyAttr),
-                EqualTo(pxAlias.toAttribute, cxAlias.toAttribute))
+                EqualTo(pxAlias.toAttribute, cxAlias.toAttribute)))
               decideSalt(l, r, lLat, lLon, cLat, cLon, jt, rv) match {
                 case None =>
                   Project(j.output,
-                    Join(leftKeyed, rightExp, jt, Some(And(cond, eqs)), hint))
-                case Some(SpatialChoice(s, false)) =>
-                  // the arrangement measured in BENCH_NOTES r15 (Inner only):
-                  // single-cell left explodes all S salts, the
-                  // cell-exploding right carries one deterministic
-                  // per-row salt
-                  val ps = Alias(Pmod(
-                    new XxHash64(saltHashInput(r.output, cLat, cLon), 42L),
-                    Literal(s.toLong)), s"${Marker}_ps")()
-                  val rightSalted = Project(
-                    rightExp.output :+ ps, rightExp)
-                  val saltAttr = AttributeReference(s"${Marker}_s", LongType,
-                    nullable = false)()
-                  val leftSalted = Generate(
-                    Explode(CreateArray(saltLiterals(s))),
-                    Nil, outer = false, None, Seq(saltAttr), leftKeyed)
-                  Project(j.output,
-                    Join(leftSalted, rightSalted, jt,
-                      Some(And(And(cond, eqs),
-                        EqualTo(saltAttr, ps.toAttribute))), hint))
-                case Some(SpatialChoice(s, true)) =>
+                    Join(leftKeyed, rightExp, jt, Some(keyCond), hint))
+                case Some(choice) =>
+                  // Inner's BENCH_NOTES r15 arrangement (single-cell left
+                  // explodes all S salts, the cell-exploding right carries
+                  // the per-row salt), or per-row salt on the left for
                   // Semi/Anti (left must stay physically unique) and
-                  // cheaper-left Inner: per-row salt on the left,
-                  // S-explode on the exploding right
-                  val ps = Alias(Pmod(
-                    new XxHash64(saltHashInput(l.output, lLat, lLon), 42L),
-                    Literal(s.toLong)), s"${Marker}_ps")()
-                  val leftSalted = Project(
-                    leftKeyed.output :+ ps, leftKeyed)
-                  val saltAttr = AttributeReference(s"${Marker}_s", LongType,
-                    nullable = false)()
-                  val rightSalted = Generate(
-                    Explode(CreateArray(saltLiterals(s))),
-                    Nil, outer = false, None, Seq(saltAttr), rightExp)
-                  Project(j.output,
-                    Join(leftSalted, rightSalted, jt,
-                      Some(And(And(cond, eqs),
-                        EqualTo(ps.toAttribute, saltAttr))), hint))
+                  // cheaper-left Inner
+                  ProbeUtil.saltedJoin(Marker, choice, leftKeyed, rightExp,
+                    ProbeUtil.saltHashInput(l.output, Seq(lLat, lLon)),
+                    ProbeUtil.saltHashInput(r.output, Seq(cLat, cLon)),
+                    keyCond, jt, hint, j.output, foldSalt = false)
               }
             case None => j
           }

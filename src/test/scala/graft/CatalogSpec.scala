@@ -20,16 +20,13 @@ class CatalogSpec extends SparkSpec {
     assert(missing.isEmpty, s"rows-only queries: $missing")
   }
 
-  test("the Plans and PlanPeek headline lists only name real catalog queries") {
+  test("the Plans headline list only names real catalog queries") {
     // a renamed/removed query would otherwise break the PLANS.md generator
-    // (or PlanPeek) at run time instead of in CI
+    // at run time instead of in CI
     val names = SparkEntry.queries.keySet
     val badPlans = Plans.headline.filterNot(names)
     assert(badPlans.isEmpty, s"Plans.headline references unknown: $badPlans")
     assert(Plans.headline.distinct.length == Plans.headline.length)
-    val badPeek = PlanPeek.defaultNames.filterNot(names)
-    assert(badPeek.isEmpty, s"PlanPeek.defaultNames references unknown: $badPeek")
-    assert(PlanPeek.defaultNames.distinct.length == PlanPeek.defaultNames.length)
   }
 
   test("QUERIES.md indexes the whole catalog (regenerate via QueriesDoc)") {

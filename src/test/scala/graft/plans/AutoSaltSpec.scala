@@ -169,8 +169,8 @@ class AutoSaltSpec extends SparkSpec {
     Graft.init(spark)
     plantedViews()
     val sql = joinSql.format("as_skew", "as_skew")
-    withConf("spark.graft.rangeJoin.autoSalt.factorAuto" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    // no factor conf set: S is the default share-adaptive factor
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = spark.sql(sql)
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("__graft_rbin_ps"), s"factorAuto should salt:\n$p")

@@ -60,6 +60,52 @@ class FewKeyMergeHintSpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` and counts the Spark jobs it submitted (the listener-bus
+    * pattern of GraftFacadeSpec). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.GraftListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val v = body
+      GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      (v, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("the probe is memoized: a second call with the same inputs runs no " +
+      "job, and rows appended behind the same plan re-probe") {
+    val dir = java.nio.file.Files.createTempDirectory("fk_memo")
+      .resolve("t").toString
+    binnedDf(20000, 8, idBase = 7000000L).write.parquet(dir)
+    // explicit schema: no inference job when the frame is built
+    def read(): DataFrame = spark.read.schema("id LONG, t LONG").parquet(dir)
+    // fresh frames and bin columns per call, as the operators build them
+    def call(df: DataFrame): Boolean = ProbeUtil.preferMergeFewKeys(df, df,
+      expr(s"t div ${W}L"), expr(s"t div ${W}L"))
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
+      val first = read()
+      val (hint, j1) = jobsDuring(call(first))
+      assert(hint, "few-key sides past broadcast should prefer merge")
+      assert(j1 >= 1, "the first call past the broadcast gate must probe")
+      val (again, j2) = jobsDuring(call(read()))
+      assert(again == hint)
+      assert(j2 == 0, s"a second call with the same inputs ran $j2 jobs")
+      binnedDf(5000, 8, idBase = 8000000L).write.mode("append").parquet(dir)
+      val grown = read()
+      assert(grown.queryExecution.optimizedPlan.semanticHash() ==
+        first.queryExecution.optimizedPlan.semanticHash())
+      val (_, j3) = jobsDuring(call(grown))
+      assert(j3 >= 1, "appended rows (new fingerprint) must re-probe")
+    }
+  }
+
   test("gate fires on few-key sides past the broadcast threshold, declines " +
       "on many-key sides of the same size") {
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
