@@ -1,6 +1,6 @@
 package graft
 
-import graft.ais.{AisIngest, Enrich, FixtureWeatherClient, HttpWeatherClient, WeatherClient}
+import graft.ais.{Enrich, FixtureWeatherClient, HttpWeatherClient, WeatherClient}
 import graft.streaming.AisPipeline
 import org.apache.spark.sql.streaming.Trigger
 

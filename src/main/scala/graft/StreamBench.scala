@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.streaming.{AisPipeline, CorpusDedup, CorpusIngest}
 
@@ -48,7 +47,7 @@ object StreamBench {
 
   private def doc(b: Int, i: Int, rows: Int): CorpusDedup.StreamDoc = {
     val id = b.toLong * rows + i
-    CorpusDedup.StreamDoc(id, ScaleRehearsal.docText(id))
+    CorpusDedup.StreamDoc(id, GenScale.docText(id))
   }
 
   /** One measured run: feed -> processAllAvailable per batch, then read the
@@ -80,495 +79,21 @@ object StreamBench {
     } finally q.stop()
   }
 
-  /** `--plateau`: long-horizon state evolution of the stream-stream
-    * encounter join — the throughput run's 10 batches never cross the 2 h
-    * watermark + 1 h range horizon, so its state only ever FILLS; this mode
-    * drives enough 10-minute batches to cross it and prints per-batch state
-    * rows/bytes, turning "growth is pre-plateau fill" into a measured
-    * plateau (BENCH_NOTES round-10 streaming section). */
-  private def plateauRun(spark: SparkSession): Unit = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val rows = 4000
-    val in = MemoryStream[ais.PositionEvent]
-    val q = AisPipeline.encounterAlerts(in.toDS()).writeStream
-      .outputMode("append").format("noop").start()
-    try {
-      (0 until 30).foreach { b =>
-        in.addData((0 until rows).map(i =>
-          position(b, i, rows, nShips = 200, boxDeg = 20, batchSpanSec = 600L)))
-        q.processAllAvailable()
-        val st = q.lastProgress.stateOperators.headOption
-        // provider evidence, once: customMetrics keys are provider-specific
-        // (rocksdb* vs loadedMapCache*), which is what adjudicates whether a
-        // memoryUsedBytes creep is live state or provider bookkeeping
-        if (b == 0) st.foreach(s => println(
-          s"PLATEAU provider_metrics=${s.customMetrics.keySet()}"))
-        println(s"PLATEAU batch=$b event_min=${b * 10} " +
-          s"state_rows=${st.map(_.numRowsTotal).getOrElse(-1L)} " +
-          s"state_mb=${st.map(_.memoryUsedBytes / 1048576).getOrElse(-1L)} " +
-          s"evicted=${st.map(_.numRowsRemoved).getOrElse(-1L)}")
-      }
-    } finally q.stop()
-  }
-
-  /** `--soak`: long-horizon state evolution of EVERY stateful operator, not
-    * just the encounter join (r10's `--plateau`). 55 batches per op — well
-    * past encounterAlerts' predicted ~18-batch watermark-fill horizon — with
-    * per-batch state rows/bytes, then one summary row per op classifying the
-    * regime the numbers show:
-    *
-    *  - watermark-bounded ops (encounter join, session windows, within-
-    *    watermark dedup) must PLATEAU: state rows flat (±2%) over the last
-    *    10 batches once eviction starts;
-    *  - corpus-memory ops (incremental MinHash dedup, paragraph dedup) are
-    *    linear BY DESIGN — state remembers every distinct doc/paragraph —
-    *    so the contract row is the measured slope (rows and bytes per 1k
-    *    docs), which is what sizes executors for a given corpus, plus the
-    *    observation that the slope is CONSTANT (no superlinear bookkeeping
-    *    creep: the r10 `ce5eee2` RocksDB-creep re-attribution, now measured
-    *    over 5.5× the horizon).
-    *
-    * Emits one `stream_soak` JSON line (appended next to the throughput line
-    * in BENCH_STREAMING.json by the caller). */
-  private def soakRun(spark: SparkSession): Unit = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val batches = 55
-
-    case class Obs(rows: Long, mb: Double, removed: Long)
-    case class Soak(name: String, kind: String, obs: Seq[Obs]) {
-      // plateau batch: first batch after which rows never exceed 1.02x the
-      // final value (eviction balancing arrivals)
-      def plateauBatch: Int = {
-        val last = obs.last.rows.toDouble
-        val i = obs.indexWhere(_.rows >= last * 0.98)
-        i
-      }
-      def isFlat: Boolean = {
-        val tail = obs.takeRight(10).map(_.rows)
-        tail.max <= (tail.min * 1.02).toLong + 2
-      }
-      // least-squares slope of state rows per batch over the run
-      def slopePerBatch: Double = {
-        val n = obs.length
-        val xs = (0 until n).map(_.toDouble)
-        val ys = obs.map(_.rows.toDouble)
-        val xm = xs.sum / n; val ym = ys.sum / n
-        val cov = xs.zip(ys).map { case (x, y) => (x - xm) * (y - ym) }.sum
-        cov / xs.map(x => (x - xm) * (x - xm)).sum
-      }
-    }
-
-    def drive(name: String, kind: String, out: DataFrame, mode: String,
-        feed: Int => Unit): Soak = {
-      val q = out.writeStream.outputMode(mode).format("noop").start()
-      try {
-        val obs = (0 until batches).map { b =>
-          feed(b); q.processAllAvailable()
-          val st = q.lastProgress.stateOperators.headOption
-          val o = Obs(st.map(_.numRowsTotal).getOrElse(-1L),
-            st.map(_.memoryUsedBytes / 1048576.0).getOrElse(0.0),
-            st.map(_.numRowsRemoved).getOrElse(-1L))
-          println(s"SOAK op=$name batch=$b rows=${o.rows} " +
-            f"mb=${o.mb}%.1f removed=${o.removed}")
-          o
-        }
-        Soak(name, kind, obs)
-      } finally q.stop()
-    }
-
-    val res = scala.collection.mutable.ArrayBuffer.empty[Soak]
-
-    // watermark-bounded: encounter join (2h wm + 1h range = 3h = 18 batches
-    // of 10 min to fill), dedup-within-watermark, session windows
-    {
-      val in = MemoryStream[ais.PositionEvent]
-      res += drive("encounter_alerts", "watermark_bounded",
-        AisPipeline.encounterAlerts(in.toDS()), "append", b => {
-          in.addData((0 until 4000).map(i =>
-            position(b, i, 4000, nShips = 200, boxDeg = 20, batchSpanSec = 600L))); ()
-        })
-    }
-    {
-      val in = MemoryStream[ais.PositionEvent]
-      res += drive("deduped_positions", "watermark_bounded",
-        AisPipeline.dedupedPositions(in.toDS()), "append", b => {
-          in.addData((0 until 4000).map(i =>
-            position(b, i, 4000, nShips = 500, boxDeg = 20, batchSpanSec = 600L))); ()
-        })
-    }
-    {
-      val in = MemoryStream[ais.PositionEvent]
-      res += drive("voyage_sessions", "watermark_bounded",
-        AisPipeline.voyageSessions(in.toDS()), "append", b => {
-          in.addData((0 until 4000).map(i =>
-            position(b, i, 4000, nShips = 500, boxDeg = 20, batchSpanSec = 600L))); ()
-        })
-    }
-    // corpus-memory (linear by design): slope is the contract
-    val docsRows = 2000;
-    {
-      val in = MemoryStream[CorpusDedup.StreamDoc]
-      res += drive("incremental_dedup", "corpus_linear",
-        CorpusDedup.incrementalDedup(in.toDS()), "update", b => {
-          in.addData((0 until docsRows).map(i => doc(b, i, docsRows))); ()
-        })
-    }
-    {
-      val in = MemoryStream[CorpusDedup.StreamDoc]
-      res += drive("paragraph_dedup", "corpus_linear",
-        CorpusDedup.paragraphDedupStream(in.toDS()), "update", b => {
-          in.addData((0 until docsRows).map(i => doc(b, i, docsRows))); ()
-        })
-    }
-
-    def fmt(v: Double): String =
-      BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val ops = res.map { s =>
-      val base = s""""${s.name}":{"kind":"${s.kind}","batches":$batches,""" +
-        s""""state_rows_last":${s.obs.last.rows},"state_mb_last":${fmt(s.obs.last.mb)}"""
-      val extra =
-        if (s.kind == "watermark_bounded")
-          s""","plateau":${s.isFlat},"plateau_batch":${s.plateauBatch},""" +
-            s""""rows_removed_last":${s.obs.last.removed}"""
-        else {
-          val mbPerBatch = (s.obs.last.mb - s.obs.head.mb) / (batches - 1)
-          s""","rows_slope_per_batch":${fmt(s.slopePerBatch)},""" +
-            s""""mb_per_batch":${fmt(mbPerBatch)}"""
-        }
-      base + extra + "}"
-    }.mkString("{", ",", "}")
-    val load1m = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val line = s"""{"metric":"stream_soak","batches":$batches,""" +
-      s""""load1m_start":${fmt(load1mStart)},""" +
-      s""""load1m":${fmt(load1m)},"steal_pct":${fmt(stealPct())},"canary_ms_end":${fmt(HostStat.canaryMs())},"ops":$ops}"""
-    println(line)
-    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (line + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-  }
-
-  /** `--statescale`: the incremental-dedup state contract driven FAR past
-    * the 55-batch soak horizon (r12 verdict item 7) — default 550 batches x
-    * 2,000 docs = 1.1M distinct docs, 10x the soak corpus. Two claims under
-    * test, both of which only a long horizon can falsify:
-    *
-    *  - the corpus-linear slope is CONSTANT into the next decade — state
-    *    bytes/rows per batch in the last tenth of the run must match the
-    *    first tenth (superlinear creep in RocksDB bookkeeping, compaction
-    *    debt, or the signature lists themselves would bend it);
-    *  - batch latency stays flat while state grows 10x — RocksDB keeps the
-    *    working set on disk, so per-batch work is probe-sized, not
-    *    state-sized (the property that makes terabyte state tractable on a
-    *    cluster: each executor pays memory for its block cache, not its
-    *    key count).
-    *
-    * Emits one `stream_statescale` JSON line. Batch count tunable via
-    * SPARK_GRAFT_STATESCALE_BATCHES. */
-  private def stateScaleRun(spark: SparkSession): Unit = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val batches = sys.env.getOrElse("SPARK_GRAFT_STATESCALE_BATCHES", "550").toInt
-    val rows = 2000
-    val in = MemoryStream[CorpusDedup.StreamDoc]
-    val q = CorpusDedup.incrementalDedup(in.toDS())
-      .writeStream.outputMode("update").format("noop").start()
-    case class Obs(batch: Int, rowsTotal: Long, mb: Double, batchMs: Long)
-    val obs = scala.collection.mutable.ArrayBuffer.empty[Obs]
-    try {
-      (0 until batches).foreach { b =>
-        in.addData((0 until rows).map(i => doc(b, i, rows)))
-        q.processAllAvailable()
-        if (b % 25 == 0 || b == batches - 1) {
-          val st = q.lastProgress.stateOperators.headOption
-          val o = Obs(b, st.map(_.numRowsTotal).getOrElse(-1L),
-            st.map(_.memoryUsedBytes / 1048576.0).getOrElse(0.0),
-            q.lastProgress.batchDuration)
-          obs += o
-          println(f"STATESCALE batch=$b rows=${o.rowsTotal} mb=${o.mb}%.1f " +
-            s"batchMs=${o.batchMs}")
-        }
-      }
-    } finally q.stop()
-    def slope(a: Obs, z: Obs): Double =
-      (z.rowsTotal - a.rowsTotal).toDouble / math.max(1, z.batch - a.batch)
-    val headSlope = slope(obs.head, obs(obs.length / 10))
-    val tailSlope = slope(obs(obs.length - 1 - obs.length / 10), obs.last)
-    def fmt(v: Double): String =
-      BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val load1m = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val line = s"""{"metric":"stream_statescale","batches":$batches,""" +
-      s""""docs":${batches.toLong * rows},""" +
-      s""""load1m_start":${fmt(load1mStart)},"load1m":${fmt(load1m)},""" +
-      s""""steal_pct":${fmt(stealPct())},""" +
-      s""""canary_ms_end":${fmt(HostStat.canaryMs())},""" +
-      s""""state_rows_last":${obs.last.rowsTotal},""" +
-      s""""state_mb_last":${fmt(obs.last.mb)},""" +
-      s""""rows_slope_first_decile":${fmt(headSlope)},""" +
-      s""""rows_slope_last_decile":${fmt(tailSlope)},""" +
-      s""""batch_ms_first":${obs.head.batchMs},""" +
-      s""""batch_ms_last":${obs.last.batchMs}}"""
-    println(line)
-    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (line + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-  }
-
-  /** `--ttlrecall`: the MEASURED cost curve of [[CorpusDedup.incrementalDedupTtl]]'s
-    * state/recall trade (r13 verdict item 7). The TTL contract trades state
-    * for duplicate LEAKAGE: a re-arrival of known content past the horizon
-    * is re-kept as a fresh keeper. This run quantifies it on a synthetic
-    * stream with PLANTED re-arrival gaps, so the SCALE.md contract row
-    * carries a curve, not a qualitative trade.
-    *
-    * Corpus: `rows` docs per batch, all stamped the same event time
-    * t0 + b*batchMs. Per batch, 25 docs each are exact copies of content
-    * ORIGINATED `g` batches earlier for g in {1, 5, 20, 50} (each original
-    * is copied exactly once, so no refresh chains confound the gap), 5 docs
-    * are copies of one batch-0 "hot" content (re-arriving EVERY batch — the
-    * LRU-refresh path: each match refreshes the keeper's last-seen, so hot
-    * content stays deduped under any horizon wider than one batch), and the
-    * rest are unique filler. Content uniqueness rides on docText ids that
-    * are multiples of 20 (docText only plants dups at ids 19/99 mod 20/100).
-    *
-    * The mechanism under test (predictable, then verified by measurement):
-    * a gap-g copy finds its keeper iff the keeper entry survived BOTH
-    * eviction mechanisms at probe time. The entry filter drops it when
-    * last_ms + horizon <= watermark, and the watermark itself lags max
-    * event time by the SAME horizon (withWatermark(ts, horizon)), so the
-    * EFFECTIVE retention is ~2x horizon: dedup iff (g-1)*batchMs <
-    * 2*horizonMs. The run emits per-(horizon, gap) dedup rates + final
-    * state rows, which should show exactly that step curve — and the
-    * state-rows column falling with the horizon is the other side of the
-    * trade. */
-  private def ttlRecallRun(spark: SparkSession): Unit = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val batchMs = 60000L
-    val t0 = 1704067200000L
-    val rows = 500
-    val batches = sys.env.getOrElse("SPARK_GRAFT_TTLRECALL_BATCHES", "120").toInt
-    val gaps = Seq(1, 5, 20, 50)
-    val perGap = 25
-    val hotN = 5
-    // slots [0, 100): gap copies; [100, 200): originals later copied;
-    // [200, 205): hot copies; rest unique filler. Content key k -> docText(20k).
-    def contentKey(b: Int, slot: Int): Long = b.toLong * rows + slot
-    def text(b: Int, slot: Int): String = {
-      val gi = slot / perGap
-      if (slot < 100 && b - gaps(gi) >= 0)
-        ScaleRehearsal.docText(20L * contentKey(b - gaps(gi), 100 + slot))
-      else if (slot >= 200 && slot < 200 + hotN && b > 0)
-        ScaleRehearsal.docText(20L * contentKey(0, 200))
-      else ScaleRehearsal.docText(20L * contentKey(b, slot))
-    }
-    def docId(b: Int, slot: Int): Long = b.toLong * 1000 + slot
-    def isGapCopy(b: Int, slot: Int): Boolean =
-      slot < 100 && b - gaps(slot / perGap) >= 0
-    def isHotCopy(b: Int, slot: Int): Boolean =
-      slot >= 200 && slot < 200 + hotN && b > 0
-    val horizonsMin = sys.env.getOrElse("SPARK_GRAFT_TTLRECALL_HORIZONS", "2,12,60")
-      .split(',').map(_.trim.toInt).toSeq
-    val perHorizon = horizonsMin.map { hMin =>
-      val horizonMs = hMin * 60000L
-      val in = MemoryStream[CorpusDedup.TimedDoc]
-      val name = s"ttlrecall_$hMin"
-      val q = CorpusDedup.incrementalDedupTtl(in.toDS(), horizonMs)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      val stateRows = try {
-        (0 until batches).foreach { b =>
-          val ts = new java.sql.Timestamp(t0 + b * batchMs)
-          in.addData((0 until rows).map(slot =>
-            CorpusDedup.TimedDoc(docId(b, slot), text(b, slot), ts)))
-          q.processAllAvailable()
-        }
-        q.lastProgress.stateOperators.headOption
-          .map(_.numRowsTotal).getOrElse(-1L)
-      } finally q.stop()
-      val verdicts = CorpusDedup.reducePerDoc(spark.table(name))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // per-gap and hot dedup rates + keeper-identity sanity
-      val gapStats = gaps.zipWithIndex.map { case (g, gi) =>
-        val copies = for {
-          b <- 0 until batches; slot <- gi * perGap until (gi + 1) * perGap
-          if isGapCopy(b, slot)
-        } yield (b, slot)
-        val n = copies.size
-        val dedup = copies.count { case (b, slot) =>
-          verdicts.getOrElse(docId(b, slot), -1L) >= 0 }
-        val wrongKeeper = copies.count { case (b, slot) =>
-          val v = verdicts.getOrElse(docId(b, slot), -1L)
-          v >= 0 && v != docId(b - gaps(gi), 100 + slot) }
-        (g, n, dedup, wrongKeeper)
-      }
-      val hotCopies = for {
-        b <- 1 until batches; slot <- 200 until 200 + hotN
-      } yield (b, slot)
-      val hotDedup = hotCopies.count { case (b, slot) =>
-        verdicts.getOrElse(docId(b, slot), -1L) >= 0 }
-      (hMin, stateRows, gapStats, hotCopies.size, hotDedup)
-    }
-    def fmt(v: Double): String =
-      BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    val load1m = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val hJson = perHorizon.map { case (hMin, st, gapStats, hotN2, hotD) =>
-      val gapsJson = gapStats.map { case (g, n, d, wrong) =>
-        s""""$g":{"n":$n,"dedup":$d,"rate":${fmt(d.toDouble / math.max(1, n))},"wrong_keeper":$wrong}"""
-      }.mkString("{", ",", "}")
-      s"""{"horizon_min":$hMin,"state_rows_final":$st,"gap_dedup":$gapsJson,""" +
-        s""""hot_n":$hotN2,"hot_dedup":$hotD,""" +
-        s""""hot_rate":${fmt(hotD.toDouble / math.max(1, hotN2))}}"""
-    }.mkString("[", ",", "]")
-    val line = s"""{"metric":"stream_ttlrecall","batches":$batches,""" +
-      s""""batch_ms":$batchMs,"rows_per_batch":$rows,""" +
-      s""""load1m_start":${fmt(load1mStart)},"load1m":${fmt(load1m)},""" +
-      s""""steal_pct":${fmt(stealPct())},""" +
-      s""""canary_ms_end":${fmt(HostStat.canaryMs())},""" +
-      s""""horizons":$hJson}"""
-    println(line)
-    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (line + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-  }
-
-  /** `--ttlstate`: the TTL horizon's STATE CEILING vs arrival rate (r14
-    * verdict item 8). The recall curve fixed leakage; the remaining open
-    * number was state ROWS at corpus-scale arrival rates — the 394k-row
-    * 60-min ttlrecall cell was measured at a synthetic 500 docs/batch.
-    * This soak ladders the per-batch row rate 10x and 50x (all-UNIQUE
-    * content — every doc is kept, the worst case for state) at a fixed
-    * horizon and measures the plateau: state rows and bytes at mid-run and
-    * end, plus throughput. The expected (then verified) law: retention is
-    * ~2x horizon (entry filter at last_ms + horizon <= watermark, and the
-    * watermark itself lags by horizon), so
-    *   state_rows_plateau ~= rows_per_minute * 2 * horizon_min * bands
-    * with bands = the LSH band count (state lives per band bucket). The
-    * measured rows-per-(doc/min·horizon-min) slope is the GB-per-horizon
-    * sizing rule for SCALE.md. */
-  private def ttlStateRun(spark: SparkSession): Unit = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val batchMs = 60000L
-    val t0 = 1704067200000L
-    val horizonMin = sys.env.getOrElse("SPARK_GRAFT_TTLSTATE_HORIZON", "12").toInt
-    val rates = sys.env.getOrElse("SPARK_GRAFT_TTLSTATE_RATES", "500,5000,25000")
-      .split(',').map(_.trim.toInt).toSeq
-    val batches = sys.env.getOrElse("SPARK_GRAFT_TTLSTATE_BATCHES", "40").toInt
-    val cells = rates.zipWithIndex.map { case (rate, ci) =>
-      val in = MemoryStream[CorpusDedup.TimedDoc]
-      val name = s"ttlstate_$rate"
-      val q = CorpusDedup.incrementalDedupTtl(in.toDS(), horizonMin * 60000L)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      try {
-        val cellBase = (ci + 1).toLong * 1000000000L
-        var midRows = -1L
-        val tStart = System.nanoTime()
-        (0 until batches).foreach { b =>
-          val ts = new java.sql.Timestamp(t0 + b * batchMs)
-          in.addData((0 until rate).map { i =>
-            val k = cellBase + b.toLong * rate + i
-            CorpusDedup.TimedDoc(k, ScaleRehearsal.docText(20L * k), ts)
-          })
-          q.processAllAvailable()
-          if (b == batches / 2)
-            midRows = q.lastProgress.stateOperators.headOption
-              .map(_.numRowsTotal).getOrElse(-1L)
-        }
-        val wall = (System.nanoTime() - tStart) / 1e9
-        val so = q.lastProgress.stateOperators.headOption
-        (rate, midRows, so.map(_.numRowsTotal).getOrElse(-1L),
-          so.map(_.memoryUsedBytes).getOrElse(-1L), wall)
-      } finally q.stop()
-    }
-    def fmt(v: Double): String =
-      BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
-    val load1m = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val cellsJson = cells.map { case (rate, mid, fin, mem, wall) =>
-      s"""{"rows_per_batch":$rate,"state_rows_mid":$mid,""" +
-        s""""state_rows_final":$fin,"state_bytes":$mem,""" +
-        s""""wall_sec":${fmt(wall)},""" +
-        s""""rows_per_sec":${fmt(batches.toLong * rate / wall)}}"""
-    }.mkString("[", ",", "]")
-    val line = s"""{"metric":"stream_ttlstate","horizon_min":$horizonMin,""" +
-      s""""batches":$batches,"batch_ms":$batchMs,""" +
-      s""""load1m_start":${fmt(load1mStart)},"load1m":${fmt(load1m)},""" +
-      s""""steal_pct":${fmt(stealPct())},""" +
-      s""""canary_ms_end":${fmt(HostStat.canaryMs())},""" +
-      s""""cells":$cellsJson}"""
-    println(line)
-    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (line + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-  }
-
-  /** Ambient host load BEFORE this JVM contributes its own — captured at
-    * main() entry, exactly the batch Bench's r11 discipline: the end-of-run
-    * load1m mostly measures the bench itself on local[32], so the START
-    * value is what adjudicates whether the host was idle (the r11 verdict's
-    * "What's wrong" #1: BENCH_STREAMING carried load1m 27.7 with no way to
-    * tell contention discount from self-load). */
-  private var load1mStart: Double = -1.0
-  private var cpuStart: (Long, Long) = (-1L, -1L)
-
-  /** Steal share since main() started — stamped into every emitted line
-    * so a co-tenant discount is visible (r16; HostStat scaladoc). */
-  private def stealPct(): Double =
-    HostStat.stealPct(cpuStart, HostStat.cpuJiffies())
-
   def main(args: Array[String]): Unit = {
-    load1mStart = java.lang.management.ManagementFactory
+    // Ambient host load BEFORE this JVM contributes its own (the batch
+    // Bench's r11 discipline): the end-of-run load1m mostly measures the
+    // bench itself, so the START value is what adjudicates whether the host
+    // was idle; the steal share since here is stamped into the emitted line
+    // so a co-tenant discount is visible (r16; HostStat scaladoc).
+    val load1mStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    cpuStart = HostStat.cpuJiffies()
+    val cpuStart = HostStat.cpuJiffies()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = Graft.session()
     // a runtime SQL conf: read when each streaming query starts
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.sparkContext.setLogLevel("WARN")
-    if (args.contains("--plateau")) {
-      plateauRun(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("--soak")) {
-      soakRun(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("--statescale")) {
-      stateScaleRun(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("--ttlrecall")) {
-      ttlRecallRun(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("--ttlstate")) {
-      ttlStateRun(spark)
-      spark.stop()
-      return
-    }
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -728,7 +253,7 @@ object StreamBench {
     }.mkString("{", ",", "}")
     val line = s"""{"metric":"stream_bench","unit":"rows_per_sec",""" +
       s""""load1m_start":${fmt(load1mStart)},"load1m":${fmt(load1m)},""" +
-      s""""steal_pct":${fmt(stealPct())},""" +
+      s""""steal_pct":${fmt(HostStat.stealPct(cpuStart, HostStat.cpuJiffies()))},""" +
       s""""canary_ms_end":${fmt(HostStat.canaryMs())},""" +
       s""""batches":$Batches,"warm":$Warm,"ops":$ops}"""
     println(line)

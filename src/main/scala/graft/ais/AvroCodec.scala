@@ -82,9 +82,10 @@ object AvroCodec {
 
   /** None when the body does not parse against the schema — a framed but
     * corrupt (or wrong-schema) payload quarantines like a bad frame instead
-    * of failing the micro-batch (the B1 drop contract; registry-resolved
-    * decode for evolved writer schemas lives in [[RegistryDecode]]). */
-  private def readRecord(reader: GenericDatumReader[GenericRecord],
+    * of failing the micro-batch (the B1 drop contract). [[RegistryDecode]]
+    * reads through here too, with readers resolved for evolved writer
+    * schemas. */
+  private[ais] def readRecord(reader: GenericDatumReader[GenericRecord],
       body: Array[Byte]): Option[GenericRecord] =
     try Some(reader.read(null, DecoderFactory.get().binaryDecoder(body, null)))
     catch { case scala.util.control.NonFatal(_) => None }
@@ -101,16 +102,20 @@ object AvroCodec {
     frame(schemaId, writeRecord(positionWriter, r))
   }
 
+  /** A record read against [[positionSchema]] (pinned or resolved from an
+    * evolved writer schema) as the engine's event. */
+  private[ais] def toPosition(r: GenericRecord): PositionEvent = {
+    val gps = r.get("location").asInstanceOf[GenericRecord]
+    PositionEvent(
+      r.get("mmsi").toString, r.get("status").toString,
+      r.get("timestamp").asInstanceOf[Long],
+      Gps(gps.get("lat").asInstanceOf[Double], gps.get("lon").asInstanceOf[Double]),
+      r.get("speed").asInstanceOf[Double], r.get("heading").asInstanceOf[Int])
+  }
+
   def bytesToPosition(bytes: Array[Byte]): Option[PositionEvent] =
     unframe(bytes).flatMap { case (_, body) =>
-      readRecord(positionReader, body).map { r =>
-        val gps = r.get("location").asInstanceOf[GenericRecord]
-        PositionEvent(
-          r.get("mmsi").toString, r.get("status").toString,
-          r.get("timestamp").asInstanceOf[Long],
-          Gps(gps.get("lat").asInstanceOf[Double], gps.get("lon").asInstanceOf[Double]),
-          r.get("speed").asInstanceOf[Double], r.get("heading").asInstanceOf[Int])
-      }
+      readRecord(positionReader, body).map(toPosition)
     }
 
   def shipInfoToBytes(e: ShipInfoEvent, schemaId: Int): Array[Byte] = {
@@ -122,12 +127,15 @@ object AvroCodec {
     frame(schemaId, writeRecord(shipInfoWriter, r))
   }
 
+  /** A record read against [[shipInfoSchema]] as the engine's event. */
+  private[ais] def toShipInfo(r: GenericRecord): ShipInfoEvent =
+    ShipInfoEvent(r.get("mmsi").toString, r.get("timestamp").asInstanceOf[Long],
+      r.get("shipname").toString, r.get("callsign").toString,
+      r.get("shiptype").toString, r.get("destination").toString)
+
   def bytesToShipInfo(bytes: Array[Byte]): Option[ShipInfoEvent] =
     unframe(bytes).flatMap { case (_, body) =>
-      readRecord(shipInfoReader, body).map(r =>
-        ShipInfoEvent(r.get("mmsi").toString, r.get("timestamp").asInstanceOf[Long],
-          r.get("shipname").toString, r.get("callsign").toString,
-          r.get("shiptype").toString, r.get("destination").toString))
+      readRecord(shipInfoReader, body).map(toShipInfo)
     }
 
   /** A11+A10 sink shape: (key = mmsi, value = framed Avro) — drop-in columns

@@ -2,11 +2,9 @@ package graft.ais
 
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.avro.io.DecoderFactory
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import scala.collection.concurrent.TrieMap
-import scala.util.control.NonFatal
 
 /** Schema-registry integration point (lib/utils.py:85-89: the reference
   * registers/fetches schemas through Confluent's SchemaRegistryClient; the
@@ -55,10 +53,8 @@ object RegistryDecode {
       cache: TrieMap[Int, Option[GenericDatumReader[GenericRecord]]])
       (bytes: Array[Byte]): Option[GenericRecord] =
     AvroCodec.unframe(bytes).flatMap { case (id, body) =>
-      resolvingReader(cache, registry, readerSchema, id).flatMap { rdr =>
-        try Some(rdr.read(null, DecoderFactory.get().binaryDecoder(body, null)))
-        catch { case NonFatal(_) => None }
-      }
+      resolvingReader(cache, registry, readerSchema, id)
+        .flatMap(AvroCodec.readRecord(_, body))
     }
 
   /** Wire → typed positions with registry-resolved writer schemas. Frames
@@ -71,16 +67,7 @@ object RegistryDecode {
       .mapPartitions { it =>
         val cache = TrieMap[Int, Option[GenericDatumReader[GenericRecord]]]()
         val decode = decodeWith(registry, AvroCodec.positionSchema, cache) _
-        it.flatMap(b => decode(b).map { r =>
-          val gps = r.get("location").asInstanceOf[GenericRecord]
-          PositionEvent(
-            r.get("mmsi").toString, r.get("status").toString,
-            r.get("timestamp").asInstanceOf[Long],
-            Gps(gps.get("lat").asInstanceOf[Double],
-              gps.get("lon").asInstanceOf[Double]),
-            r.get("speed").asInstanceOf[Double],
-            r.get("heading").asInstanceOf[Int])
-        })
+        it.flatMap(b => decode(b).map(AvroCodec.toPosition))
       }
   }
 
@@ -92,11 +79,7 @@ object RegistryDecode {
       .mapPartitions { it =>
         val cache = TrieMap[Int, Option[GenericDatumReader[GenericRecord]]]()
         val decode = decodeWith(registry, AvroCodec.shipInfoSchema, cache) _
-        it.flatMap(b => decode(b).map(r =>
-          ShipInfoEvent(r.get("mmsi").toString,
-            r.get("timestamp").asInstanceOf[Long],
-            r.get("shipname").toString, r.get("callsign").toString,
-            r.get("shiptype").toString, r.get("destination").toString)))
+        it.flatMap(b => decode(b).map(AvroCodec.toShipInfo))
       }
   }
 }

@@ -128,7 +128,4 @@ final class LongLongOpenMap(initialSlots: Int) extends Serializable {
       i += 1
     }
   }
-
-  /** In-heap footprint of the two arrays, for the memory-honesty notes. */
-  def tableBytes: Long = 16L * (mask + 1)
 }

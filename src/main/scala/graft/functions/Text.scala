@@ -52,10 +52,6 @@ object Text {
   def denseLength(text: Column): Column =
     length(regexp_replace(trim(text), "\\s+", ""))
 
-  /** Punctuation-character count (ASCII, mirrors oracle regex). */
-  def punctCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[!-/:-@\\[-`{-~]", ""))
-
   /** Composite [0,1] quality score from length, token shape and stopword
     * density, UNROUNDED. Pure linear arithmetic (no exp/log) so both engines
     * compute bit-identical doubles. */

@@ -87,7 +87,7 @@ object Graph {
     var contrib = ew.crossJoin(broadcast(nn))
       .select(col("dst").as("node"), ((lit(1.0) / col("n")) * col("frac")).as("x"))
       .groupBy(col("node")).agg(sum(col("x")).as("cs"))
-    for (k <- 2 to steps) {
+    for (_ <- 2 to steps) {
       val pr = contrib.crossJoin(broadcast(nn))
         .select(col("node").as("src"),
           Num.pround(lit(1.0 - damping) / col("n") +

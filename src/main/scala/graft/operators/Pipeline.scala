@@ -3,7 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.functions.{Num, Text}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -325,43 +325,6 @@ object Pipeline {
         .filter(col("token_id") <= 20)
         .select(col("token"), col("n"), col("token_id"))
     })
-
-  /** The composed batch export — the §7.6 story end to end: quality gate →
-    * near-dup keeper filter (LSH candidates → exact verify → connected
-    * components, non-keepers dropped) → global sequence packing → a
-    * range-partitioned parquet layout ordered by (bin, bin_offset) so a
-    * training loader streams bins sequentially with zero shuffling at read
-    * time. Returns the packed manifest it wrote. Every stage is a catalog
-    * operator; this function is their composition, not new semantics. */
-  def exportTrainingSet(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, outPath: String,
-      capacity: Long = PackCapacity): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val toks = Text.tokens(col("text"))
-    val dense = length(regexp_replace(trim(col("text")), "\\s+", ""))
-    val clean = docs
-      .withColumn("n_tokens", size(toks).cast("long"))
-      .filter(col("n_tokens") >= 5 &&
-        dense.cast("double") / greatest(col("n_tokens"), lit(1L)) <= 20.0)
-    val pairs = Dedup.minHashDedup(clean, "doc_id", "text",
-      n = 3, numHashes = Dedup.LshNumHashes, bands = Dedup.LshBands,
-      threshold = 0.8)
-    val dups = Dedup.connectedComponents(pairs)
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("dup_id"))
-    val kept = clean.join(dups, col("doc_id") === col("dup_id"), "left_anti")
-    val packed = packSequences(
-      kept.select(col("doc_id"), col("n_tokens")),
-      "doc_id", "n_tokens", capacity)
-    val manifest = packed.join(kept.select(col("doc_id"), col("text")), "doc_id")
-      .select(col("bin"), col("bin_offset"), col("doc_id"),
-        col("n_tokens"), col("text"))
-    manifest
-      .repartitionByRange(col("bin"))
-      .sortWithinPartitions(col("bin"), col("bin_offset"))
-      .write.mode("overwrite").parquet(outPath)
-    manifest
-  }
 
   val defs: Seq[QueryDef] =
     Seq(packQ, sampleQ, tfidfQ, liftQ, bloomQ, samplePerKeyQ, chunkQ, vocabQ)

@@ -394,7 +394,6 @@ object Retrieval {
     * [[Dedup.connectedComponents]] size gate; the Deferred wrapper moves
     * it to first action. */
   private def prfRanked(docs: DataFrame, terms: Seq[String]): DataFrame = {
-    import docs.sparkSession.implicits._
     val baseA = bm25Base(docs, "doc_id", "text", terms.toSet)
     val stats = bm25Stats(baseA)
     val tfA = bm25Tf(baseA)

@@ -3,7 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.functions.Num
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ais._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
@@ -238,15 +238,5 @@ object AisPipeline {
       .filter(col("dist_km") <= radiusKm)
       .select(col("mmsi_a"), col("mmsi_b"), col("ts_a"), col("ts_b"),
         col("dist_km"), col("lat_a"), col("lon_a"))
-  }
-
-  /** Batch replay of the full pipeline: NMEA text file(s) → the two tables.
-    * Same transforms as streaming (they're stateless) — used by entry() and
-    * golden tests. */
-  def replayBatch(spark: SparkSession, nmeaPath: String)
-      : (Dataset[PositionEvent], Dataset[ShipInfoEvent]) = {
-    import spark.implicits._
-    val d = AisIngest.decode(spark.read.textFile(nmeaPath))
-    (AisIngest.positions(d), AisIngest.shipInfo(d))
   }
 }

@@ -66,7 +66,7 @@ class CrashRecoverySpec extends SparkSpec {
     (0 until DocsPerBatch).map { i =>
       val id = b.toLong * DocsPerBatch + i
       val srcId = if (b >= 3 && i < 10) i.toLong else id
-      StreamDoc(id, graft.ScaleRehearsal.docText(srcId))
+      StreamDoc(id, graft.GenScale.docText(srcId))
     }
 
   /** Drive `pipeline` over the five batches with RocksDB state; if `crashAt`
