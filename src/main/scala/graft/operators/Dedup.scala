@@ -708,35 +708,12 @@ object Dedup {
       .withColumn("label", col("id"))
       .cache()
     var converged = false
-    // dev-only plan evidence (VERDICT r16 #7): when set, each round's
-    // label-update plan is executed standalone through the noop sink and its
-    // FINAL adaptive plan dumped, so the "cached co-partitioned edge side
-    // joins with no Exchange" claim is directly visible in plans/ rather
-    // than inferred from a PlanSpec replica. Unset (production/bench), this
-    // is a no-op.
-    val dumpDir = pairs.sparkSession.conf
-      .getOption("spark.graft.debug.fixpointPlanDir")
-    var round = 0
     while (!converged) {
-      round += 1
       val neighborLabels = labels.join(edges, col("id") === col("i"))
         .select(col("j").as("id"), col("label"))
       val next = labels.unionByName(neighborLabels)
         .groupBy(col("id")).agg(min(col("label")).as("label"))
         .cache()
-      dumpDir.foreach { d =>
-        val probe = labels.unionByName(neighborLabels)
-          .groupBy(col("id")).agg(min(col("label")).as("label"))
-        // execute the probe's OWN QueryExecution so the dump is the final
-        // adaptive plan (a noop write would plan a separate command QE and
-        // leave this one isFinalPlan=false)
-        probe.queryExecution.toRdd.count()
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$d/fixpoint_round$round.txt"),
-          probe.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-            .getBytes("UTF-8"))
-      }
       converged = next.as("n")
         .join(labels.as("o"), col("n.id") === col("o.id"))
         .filter(col("n.label") < col("o.label"))

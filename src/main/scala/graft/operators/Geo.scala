@@ -4,7 +4,8 @@ import graft.QueryDef
 import graft.functions.Num
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{Abs, Add, Asin, Cos, Divide, Expression, Floor, GreaterThanOrEqual, If, Least, Literal, Multiply, Pmod, Sin, Sqrt, Subtract, ToDegrees, ToRadians}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,6 +38,10 @@ object Geo {
               (event_id % 3580) / 10.0 - 179.0 AS lon
        FROM events"""
 
+  /** Earth radius in km: the one constant behind [[haversineExpr]], its
+    * DuckDB twin and [[diskCover]]. */
+  private[graft] val EarthR = 6371.0088
+
   /** Great-circle distance in km (haversine) as a raw Catalyst expression
     * tree — one implementation serves both the Column API and the
     * `haversine_km` SQL function (the function registry needs Expressions,
@@ -45,7 +50,6 @@ object Geo {
     * like the oracle SQL so both engines run the same IEEE sequence. */
   def haversineExpr(lat1: Expression, lon1: Expression,
       lat2: Expression, lon2: Expression): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{Add, Asin, Cos, Divide, Least, Literal, Multiply, Sin, Sqrt, Subtract, ToRadians}
     def rad(e: Expression) = ToRadians(e)
     val dlat = Divide(rad(Subtract(lat2, lat1)), Literal(2.0))
     val dlon = Divide(rad(Subtract(lon2, lon1)), Literal(2.0))
@@ -53,19 +57,72 @@ object Geo {
       Multiply(Sin(dlat), Sin(dlat)),
       Multiply(Multiply(Multiply(Cos(rad(lat1)), Cos(rad(lat2))),
         Sin(dlon)), Sin(dlon)))
-    Multiply(Literal(2 * 6371.0088), Asin(Least(Seq(Sqrt(a), Literal(1.0)))))
+    Multiply(Literal(2 * EarthR), Asin(Least(Seq(Sqrt(a), Literal(1.0)))))
+  }
+
+  /** Inclusive 1-degree cell ranges of a disk: lat cells [latLo, latHi] and
+    * raw lon cells [lonLo, lonHi]; each raw lon cell maps through [[wrapLon]]. */
+  private[graft] final case class DiskCover(latLo: Expression, latHi: Expression,
+      lonLo: Expression, lonHi: Expression)
+
+  /** The 1-degree cells a disk of `rKm` around the double point (lat, lon)
+    * can touch — the exact spherical bounding box. Lat cells span
+    * dlat = r/R; lon cells span dlon = asin(sin(r/R)/cos(lat)) (the
+    * parallel-arc approximation under-covers, because great circles bulge
+    * poleward), widening to every longitude when the disk crosses a pole,
+    * and capped at 360 cells so the mod-360 wrap cannot yield a cell twice.
+    * A point within `rKm` of the center therefore has its [[pointCell]] in
+    * the cover exactly once. The one cover in the engine: the
+    * [[graft.plans.BlockHaversineJoins]] rule, [[closePairs]] and the
+    * streaming `AisPipeline.encounterAlerts` all expand through it. */
+  private[graft] def diskCover(lat: Expression, lon: Expression, rKm: Double): DiskCover = {
+    val delta = rKm / EarthR // angular radius
+    val dlatDeg = Literal(math.toDegrees(delta))
+    val polar = GreaterThanOrEqual(Add(Abs(lat), dlatDeg), Literal(90.0))
+    val dlonDeg = ToDegrees(Asin(Divide(Sin(Literal(delta)),
+      Cos(ToRadians(lat)))))
+    val lonLo = If(polar, Literal(-180L), Floor(Subtract(lon, dlonDeg)))
+    val lonHi = Least(Seq(
+      If(polar, Literal(179L), Floor(Add(lon, dlonDeg))),
+      Add(lonLo, Literal(359L))))
+    DiskCover(Floor(Subtract(lat, dlatDeg)), Floor(Add(lat, dlatDeg)),
+      lonLo, lonHi)
+  }
+
+  /** A floor'd lon cell wrapped into [-180, 179] (the antimeridian). */
+  private[graft] def wrapLon(cell: Expression): Expression =
+    Subtract(Pmod(Add(cell, Literal(180L)), Literal(360L)), Literal(180L))
+
+  /** The 1-degree cell (floor(lat), wrapped floor(lon)) of a point. */
+  private[graft] def pointCell(lat: Expression, lon: Expression): (Expression, Expression) =
+    (Floor(lat), wrapLon(Floor(lon)))
+
+  /** Column form of [[pointCell]], as columns `cy` and `cx` of `df`. */
+  private[graft] def withPointCell(df: DataFrame, lat: Column, lon: Column)
+      : DataFrame = {
+    val (cy, cx) = pointCell(expression(lat), expression(lon))
+    df.withColumn("cy", column(cy)).withColumn("cx", column(cx))
+  }
+
+  /** Column form of [[diskCover]]: one row of `df` per cell of its disk,
+    * in columns `cy` and `cx` — for the joins that must carry their own
+    * equality key (an hour bin beside the cell, or a stream-stream join). */
+  private[graft] def withDiskCells(df: DataFrame, lat: Column, lon: Column,
+      rKm: Double): DataFrame = {
+    val c = diskCover(expression(lat), expression(lon), rKm)
+    df.withColumn("cy", explode(sequence(column(c.latLo), column(c.latHi))))
+      .withColumn("cx", explode(sequence(column(c.lonLo), column(c.lonHi))))
+      .withColumn("cx", column(wrapLon(expression(col("cx")))))
   }
 
   /** Column form of [[haversineExpr]]. */
-  def haversineKm(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+  def haversineKm(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
     column(haversineExpr(expression(lat1), expression(lon1),
       expression(lat2), expression(lon2)))
-  }
 
   /** Same formula, same evaluation order, in DuckDB SQL. */
   private def haversineSql(lat1: String, lon1: String, lat2: String, lon2: String): String =
-    s"""(2 * 6371.0088) * asin(least(sqrt(
+    s"""(2 * $EarthR) * asin(least(sqrt(
           sin(radians($lat2 - $lat1) / 2) * sin(radians($lat2 - $lat1) / 2) +
           cos(radians($lat1)) * cos(radians($lat2)) *
           sin(radians($lon2 - $lon1) / 2) * sin(radians($lon2 - $lon1) / 2)), 1.0))"""
@@ -131,51 +188,30 @@ object Geo {
           Num.pround(max(col("step_km")), 2).as("max_leg_km"))
     })
 
-  /** Spatial radius join via grid blocking — "every position within `r` km
-    * of a port" without the position x port product: each port expands ONCE
-    * into its disk's candidate 1-degree cells (the exact spherical bounding
-    * box: dlat = r/R in degrees, dlon = asin(sin(r/R)/cos(plat)) — the
-    * parallel-arc approximation UNDER-covers because great circles dip
-    * poleward; candidate lon cells normalize mod 360 for the antimeridian),
-    * positions join the tiny broadcast cell list on their own cell key, and
-    * the exact haversine filters candidates. At 100 TB the fact side never
-    * shuffles (broadcast equi-join on (cy, cx)) and candidate work per
-    * position is the ports sharing its cell, not |ports|. The oracle runs
-    * the quadratic join, so the gate IS the proof that blocking misses
-    * nothing. */
-  private[graft] val EarthR = 6371.0088
+  /** The catalog's port radius in km. */
   val radiusKm = 800.0
 
-  /** Expand ports (port_id, plat, plon) into their disks' candidate
-    * 1-degree cells (cy, cx) — exact spherical bounding box, antimeridian-
-    * wrapped. The output is broadcast-sized: O(|ports| · (r/111km)²). */
-  def portCells(ports: DataFrame, r: Double): DataFrame = {
-    val dlat = lit(math.toDegrees(r / EarthR))
-    val dlon = degrees(asin(sin(lit(r / EarthR)) / cos(radians(col("plat")))))
-    ports
-      .withColumn("cy", explode(sequence(
-        floor(col("plat") - dlat).cast("long"),
-        floor(col("plat") + dlat).cast("long"))))
-      .withColumn("cx0", explode(sequence(
-        floor(col("plon") - dlon).cast("long"),
-        floor(col("plon") + dlon).cast("long"))))
-      .withColumn("cx", pmod(col("cx0") + 180, lit(360)) - 180)
-      .select(col("port_id"), col("plat"), col("plon"), col("cy"), col("cx"))
-  }
-
-  /** Grid-blocked radius join: rows of `pos` (needs lat/lon columns) within
-    * `r` km of any port. Streaming-safe — `pos` may be a streaming
-    * DataFrame: the candidate-cell side is a static broadcast, so the join
-    * adds no streaming state (same shape as the Bloom decontamination
-    * gate). */
-  def withinRadius(pos: DataFrame, ports: DataFrame, r: Double): DataFrame =
-    pos
-      .withColumn("cy", floor(col("lat")).cast("long"))
-      .withColumn("cx", floor(col("lon")).cast("long"))
-      .join(broadcast(portCells(ports, r)), Seq("cy", "cx"))
-      .withColumn("dist_km", Num.pround(
-        haversineKm(col("plat"), col("plon"), col("lat"), col("lon")), 4))
+  /** Spatial radius join: rows of `pos` (needs lat/lon columns) within `r`
+    * km of any port of `ports` (port_id, plat, plon), with the rounded
+    * `dist_km`. It is a plain join on the exact haversine predicate, which
+    * admits r + 1e-4 so that every pair whose 4-decimal `dist_km` rounds to
+    * at most r is a candidate. On sessions from `Graft.session` or
+    * `GraftExtensions` the [[graft.plans.BlockHaversineJoins]] rule blocks
+    * it: each port expands once into its [[diskCover]] cells, positions
+    * join that broadcast cell list on their own [[pointCell]], and the
+    * predicate filters the candidates — at 100 TB the fact side never
+    * shuffles, and candidate work per position is the ports sharing its
+    * cell, not |ports|. Elsewhere it is a correct nested-loop join. The
+    * oracle runs the quadratic join, so the gate is the proof that blocking
+    * misses nothing. Streaming-safe — `pos` may be a streaming DataFrame:
+    * the port side is a static broadcast, so the join adds no streaming
+    * state (same shape as the Bloom decontamination gate). */
+  def withinRadius(pos: DataFrame, ports: DataFrame, r: Double): DataFrame = {
+    val d = haversineKm(col("plat"), col("plon"), col("lat"), col("lon"))
+    pos.join(broadcast(ports), d <= r + 1e-4)
+      .withColumn("dist_km", Num.pround(d, 4))
       .filter(col("dist_km") <= r)
+  }
 
   val radiusJoinQ = QueryDef(
     "geo_radius_join",
@@ -202,11 +238,10 @@ object Geo {
     * 50 km and 1 hour of each other — the spatio-temporal interval self-join
     * (collision-avoidance / rendezvous analytics). Blocked exactly once per
     * pair with zero post-dedup: the left side keeps its (hour-bin, cell)
-    * key; the right side expands to 3 hour-bins x 3 lat-cells x its
-    * lat-dependent lon-cell range (same exact spherical bound as
-    * [[portCells]], antimeridian-wrapped) — for any qualifying pair exactly
-    * ONE expansion row matches (the bin/cell deltas are determined by the
-    * pair), so the equi-join emits each pair once. |lat| <= 70 bounds the
+    * key; the right side expands to 3 hour-bins x its [[diskCover]] cells
+    * — for any qualifying pair exactly ONE expansion row matches (the
+    * bin/cell deltas are determined by the pair), so the equi-join emits
+    * each pair once. |lat| <= 70 bounds the
     * lon expansion (a 1-degree lon cell shrinks to ~19 km at lat 80, which
     * would blow up the candidate count — the shipping-lane band is the
     * documented domain). At 100 TB: one shuffle of each side on the
@@ -226,7 +261,7 @@ object Geo {
     * d ≤ 50.00005 ⇒ |Δlat| ≤ d/111.19 km-per-degree < 0.4498° ⇒ lat-cell
     * delta ∈ {-1,0,1}; and with BOTH |lat| ≤ 70 (the p filter),
     * cos(la)cos(lb)·sin²(Δλ/2) ≤ sin²(25.0001/R) gives |Δλ| ≤
-    * 2·asin(sin(25.0001/6371.0088)/cos 70°) = 1.3149° < 2 ⇒ lon-cell
+    * 2·asin(sin(25.0001/R)/cos 70°) = 1.3149° < 2 ⇒ lon-cell
     * delta ∈ [-2, 2] (mod 360 for the antimeridian, same wrap as the
     * engine). The 45 expansion keys per right-side row are distinct, so
     * each event pair meets AT MOST once — and at least once by the cover
@@ -268,22 +303,18 @@ object Geo {
     val r = encounterKm
     val p = p0.filter(abs(col("lat")) <= 70)
       .withColumn("hb", floor(col("ts_us") / encounterUs).cast("long"))
-      .withColumn("cy", floor(col("lat")).cast("long"))
-      .withColumn("cx", floor(col("lon")).cast("long"))
-    val a = p.select(col("ship").as("ship_a"), col("ts_us").as("ts_a"),
-      col("lat").as("lat_a"), col("lon").as("lon_a"),
-      col("hb"), col("cy"), col("cx"))
-    val dlon = degrees(asin(sin(lit(r / EarthR)) / cos(radians(col("lat")))))
-    val b = p
-      .withColumn("hbc", explode(sequence(col("hb") - 1, col("hb") + 1)))
-      .withColumn("cyc", explode(sequence(col("cy") - 1, col("cy") + 1)))
-      .withColumn("cxc", explode(sequence(
-        floor(col("lon") - dlon).cast("long"),
-        floor(col("lon") + dlon).cast("long"))))
+    val a = withPointCell(p, col("lat"), col("lon"))
+      .select(col("ship").as("ship_a"), col("ts_us").as("ts_a"),
+        col("lat").as("lat_a"), col("lon").as("lon_a"),
+        col("hb"), col("cy"), col("cx"))
+    // the cover admits r + 1e-4: `d` is rounded to 4 decimals before the
+    // r filter, so a pair up to r + 5e-5 km apart still qualifies
+    val b = withDiskCells(
+        p.withColumn("hb", explode(sequence(col("hb") - 1, col("hb") + 1))),
+        col("lat"), col("lon"), r + 1e-4)
       .select(col("ship").as("ship_b"), col("ts_us").as("ts_b"),
         col("lat").as("lat_b"), col("lon").as("lon_b"),
-        col("hbc").as("hb"), col("cyc").as("cy"),
-        (pmod(col("cxc") + 180, lit(360)) - 180).as("cx"))
+        col("hb"), col("cy"), col("cx"))
     a.join(b, Seq("hb", "cy", "cx"))
       .filter(col("ship_a") < col("ship_b") &&
         abs(col("ts_a") - col("ts_b")) <= encounterUs)

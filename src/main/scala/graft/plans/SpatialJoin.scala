@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.operators.Geo
 import org.apache.spark.sql.{GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
@@ -11,9 +12,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 import ProbeUtil.SaltChoice
 
 /** Optimizer rule that turns a naive radius join — plain SQL
-  * `a JOIN b ON haversine_km(b.lat, b.lon, a.lat, a.lon) <= r` — into the
-  * grid-blocked equi-join [[graft.operators.Geo.withinRadius]] builds by
-  * hand: without it Catalyst has no equi-key and plans a nested-loop over
+  * `a JOIN b ON haversine_km(b.lat, b.lon, a.lat, a.lon) <= r`, or
+  * [[graft.operators.Geo.withinRadius]] — into a grid-blocked equi-join:
+  * without it Catalyst has no equi-key and plans a nested-loop over
   * the full product (quadratic; unrunnable at 100 TB). The rule encodes the
   * domain knowledge the optimizer lacks: a haversine disk is contained in a
   * computable set of 1-degree cells.
@@ -23,24 +24,22 @@ import ProbeUtil.SaltChoice
   * near / far from this set", the decontamination shape).
   *
   * Rewrite (semantics-preserving by construction):
-  *   - the LEFT side gains its cell key (floor(lat), wrapped floor(lon)) —
-  *     left rows stay physically unique, as semi/anti existence semantics
+  *   - the LEFT side gains its cell key ([[graft.operators.Geo.pointCell]])
+  *     — left rows stay physically unique, as semi/anti existence semantics
   *     require;
-  *   - the RIGHT side explodes into its
-  *     disk's candidate cells — the exact spherical bounding box
-  *     (dlat = r/R; dlon = asin(sin(r/R)/cos(lat)), widening to the full
-  *     lon range when the disk crosses a pole), candidate lon cells wrapped
-  *     mod 360 for the antimeridian and capped at 360 values so no pair can
-  *     match twice;
+  *   - the RIGHT side explodes into its disk's candidate cells
+  *     ([[graft.operators.Geo.diskCover]]: the exact spherical bounding
+  *     box, every longitude past a pole, at most 360 wrapped lon cells so
+  *     no pair can match twice);
   *   - the ORIGINAL join condition is kept in full as the residual, with the
   *     two cell equalities appended — ExtractEquiJoinKeys then plans a hash
   *     join on the cells and the exact predicate filters candidates.
   * Every qualifying pair meets on exactly one candidate row (the cell
   * deltas are determined by the pair), so no dedup is needed; disqualified
   * candidates are removed by the retained original predicate. PropertySpec
-  * pins the identical blocked-vs-brute-force guarantee for the hand-built
-  * form; SpatialRuleSpec pins rule-on == rule-off results and the absence
-  * of nested loops.
+  * pins blocked == brute force through `withinRadius` (polar ports
+  * included); SpatialRuleSpec pins rule-on == rule-off results and the
+  * absence of nested loops.
   *
   * ==Automatic hot-cell salting (r15)==
   *
@@ -69,7 +68,6 @@ import ProbeUtil.SaltChoice
   */
 object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val EarthR = 6371.0088
   private val Marker = "__graft_cell"
 
   /** Peel analyzer-inserted casts (view columns are often decimal; the
@@ -104,7 +102,7 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
                     Cos(ToRadians(la1)), Cos(ToRadians(la2)), _),
                     Sin(dlonA), _), Sin(dlonB), _), _)),
               Literal(1.0, DoubleType)))), _)
-            if c == 2 * EarthR && dlatA.semanticEquals(dlatB) &&
+            if c == 2 * Geo.EarthR && dlatA.semanticEquals(dlatB) &&
               dlonA.semanticEquals(dlonB) =>
           (halfRad(dlatA), halfRad(dlonA)) match {
             case (Some((lat2, lat1)), Some((lon2, lon1)))
@@ -116,10 +114,6 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
         case _ => None
       }
   }
-
-  /** floor'd lon cell wrapped into [-180, 179]. */
-  private def wrap(cell: Expression): Expression =
-    Subtract(Pmod(Add(cell, Literal(180L)), Literal(360L)), Literal(180L))
 
   // ------------------------------------------------------- hot-cell salting
 
@@ -136,9 +130,9 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
 
   private def cellCounts(spark: SparkSession, child: LogicalPlan,
       latE: Expression, lonE: Expression, name: String) = {
-    val cy = Alias(Floor(latE), "cy")()
-    val cx = Alias(wrap(Floor(lonE)), "cx")()
-    GraftExpressionBridge.ofRows(spark, Project(Seq(cy, cx), child))
+    val (cy, cx) = Geo.pointCell(latE, lonE)
+    GraftExpressionBridge.ofRows(spark,
+        Project(Seq(Alias(cy, "cy")(), Alias(cx, "cx")()), child))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as(name))
   }
 
@@ -189,7 +183,7 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
         // latitude, which errs toward keeping the duplication OFF the
         // larger right side).
         val cexp = {
-          val d = math.toDegrees(rv / EarthR)
+          val d = math.toDegrees(rv / Geo.EarthR)
           (2 * d + 1) * (2 * d + 1)
         }
         val saltOnLeft = jt != Inner || cexp * s.rRows < s.lRows
@@ -234,47 +228,31 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
             else None
           sides match {
             case Some(((rLat, rLon), (lLat, lLon))) =>
-              val delta = rv / EarthR // angular radius
-              val dlatDeg = Literal(math.toDegrees(delta))
-              val cLat = rLat
-              val cLon = rLon
-              // lat cells of the disk
-              val latLo = Floor(Subtract(cLat, dlatDeg))
-              val latHi = Floor(Add(cLat, dlatDeg))
+              val cover = Geo.diskCover(rLat, rLon, rv)
               val cyAttr = AttributeReference(s"${Marker}_cy", LongType,
                 nullable = false)()
               def seq(lo: Expression, hi: Expression): Sequence =
                 new Sequence(lo, hi, None,
                   Some(conf.sessionLocalTimeZone))
-              val genLat = Generate(Explode(seq(latLo, latHi)),
+              val genLat = Generate(Explode(seq(cover.latLo, cover.latHi)),
                 Nil, outer = false, None, Seq(cyAttr), r)
-              // lon half-width: exact disk bound, full range past a pole,
-              // capped at 360 cells so wrap can't produce duplicate cells
-              val polar = GreaterThanOrEqual(
-                Add(Abs(cLat), dlatDeg), Literal(90.0))
-              val dlonDeg = ToDegrees(Asin(Divide(Sin(Literal(delta)),
-                Cos(ToRadians(cLat)))))
-              val lonLo = If(polar, Literal(-180L),
-                Floor(Subtract(cLon, dlonDeg)))
-              val lonHi = Least(Seq(
-                If(polar, Literal(179L), Floor(Add(cLon, dlonDeg))),
-                Add(lonLo, Literal(359L))))
               val cxRaw = AttributeReference(s"${Marker}_cx0", LongType,
                 nullable = false)()
-              val genLon = Generate(Explode(seq(lonLo, lonHi)),
+              val genLon = Generate(Explode(seq(cover.lonLo, cover.lonHi)),
                 Nil, outer = false, None, Seq(cxRaw), genLat)
-              val cxAlias = Alias(wrap(cxRaw), s"${Marker}_cx")()
+              val cxAlias = Alias(Geo.wrapLon(cxRaw), s"${Marker}_cx")()
               val rightExp = Project(
                 r.output ++ Seq(cyAttr, cxAlias), genLon)
               // left side: its own single cell
-              val pyAlias = Alias(Floor(lLat), s"${Marker}_py")()
-              val pxAlias = Alias(wrap(Floor(lLon)), s"${Marker}_px")()
+              val (py, px) = Geo.pointCell(lLat, lLon)
+              val pyAlias = Alias(py, s"${Marker}_py")()
+              val pxAlias = Alias(px, s"${Marker}_px")()
               val leftKeyed = Project(
                 l.output ++ Seq(pyAlias, pxAlias), l)
               val keyCond = And(cond, And(
                 EqualTo(pyAlias.toAttribute, cyAttr),
                 EqualTo(pxAlias.toAttribute, cxAlias.toAttribute)))
-              decideSalt(l, r, lLat, lLon, cLat, cLon, jt, rv) match {
+              decideSalt(l, r, lLat, lLon, rLat, rLon, jt, rv) match {
                 case None =>
                   Project(j.output,
                     Join(leftKeyed, rightExp, jt, Some(keyCond), hint))
@@ -286,7 +264,7 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
                   // cheaper-left Inner
                   ProbeUtil.saltedJoin(Marker, choice, leftKeyed, rightExp,
                     ProbeUtil.saltHashInput(l.output, Seq(lLat, lLon)),
-                    ProbeUtil.saltHashInput(r.output, Seq(cLat, cLon)),
+                    ProbeUtil.saltHashInput(r.output, Seq(rLat, rLon)),
                     keyCond, jt, hint, j.output, foldSalt = false)
               }
             case None => j

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ais._
+import graft.operators.Geo
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
@@ -180,13 +181,14 @@ object AisPipeline {
     * each other, emitted as the reports arrive.
     *
     * Spark's stream-stream inner join needs an equi-key plus an event-time
-    * range, and that is exactly the batch blocking scheme: the left side
-    * keeps its 1-degree (cy, cx) cell; the right side expands to its 3
-    * lat-cells x lat-dependent lon-cell range (the exact spherical bound,
-    * antimeridian-wrapped — same math as Geo.portCells). For any qualifying
-    * pair exactly ONE expansion row matches, so the join emits each
-    * encounter once with no post-dedup — the property the batch operator
-    * proves against its quadratic oracle carries over unchanged.
+    * range before the optimizer runs, so the key is built here, from the
+    * batch blocking scheme: the left side keeps its 1-degree cell
+    * (Geo.pointCell); the right side expands to the cells of its
+    * `radiusKm` disk (Geo.diskCover, the one cover the BlockHaversineJoins
+    * rule also uses). For any qualifying pair exactly ONE expansion row
+    * matches, so the join emits each encounter once with no post-dedup —
+    * the property the batch operator proves against its quadratic oracle
+    * carries over unchanged.
     *
     * State is bounded twice over: watermarks on BOTH sides let Spark drop
     * join state older than `watermark` + `timeRange`, and the |lat| <= 70
@@ -197,30 +199,19 @@ object AisPipeline {
   def encounterAlerts(pos: Dataset[PositionEvent], radiusKm: Double = 50.0,
       timeRange: String = "1 hour",
       watermark: String = "2 hours"): DataFrame = {
-    val earthR = 6371.0
     val base = pos.toDF()
       .filter(abs(col("location.lat")) <= 70)
       .select(col("mmsi"), col("location.lat").as("lat"),
         col("location.lon").as("lon"), col("speed"),
         to_timestamp(from_unixtime(col("timestamp"))).as("ts"))
-    val a = base
+    val a = Geo.withPointCell(base, col("lat"), col("lon"))
       .select(col("mmsi").as("mmsi_a"), col("lat").as("lat_a"),
         col("lon").as("lon_a"), col("speed").as("speed_a"),
-        col("ts").as("ts_a"),
-        floor(col("lat")).cast("long").as("cy"),
-        floor(col("lon")).cast("long").as("cx"))
+        col("ts").as("ts_a"), col("cy"), col("cx"))
       .withWatermark("ts_a", watermark)
-    val dlon = degrees(asin(sin(lit(radiusKm / earthR)) / cos(radians(col("lat")))))
-    val b = base
-      .withColumn("cyc", explode(sequence(
-        floor(col("lat")).cast("long") - 1, floor(col("lat")).cast("long") + 1)))
-      .withColumn("cxc", explode(sequence(
-        floor(col("lon") - dlon).cast("long"),
-        floor(col("lon") + dlon).cast("long"))))
+    val b = Geo.withDiskCells(base, col("lat"), col("lon"), radiusKm)
       .select(col("mmsi").as("mmsi_b"), col("lat").as("lat_b"),
-        col("lon").as("lon_b"), col("ts").as("ts_b"),
-        col("cyc").as("cy"),
-        (pmod(col("cxc") + 180, lit(360)) - 180).as("cx"))
+        col("lon").as("lon_b"), col("ts").as("ts_b"), col("cy"), col("cx"))
       .withWatermark("ts_b", watermark)
     // the pair-ordering/distance checks are post-join filters, though the
     // optimizer folds them back into the join condition; the state manager
@@ -233,7 +224,7 @@ object AisPipeline {
           col("b.ts_b") >= col("a.ts_a") - expr(s"INTERVAL $timeRange") &&
           col("b.ts_b") <= col("a.ts_a") + expr(s"INTERVAL $timeRange"))
       .filter(col("mmsi_a") < col("mmsi_b"))
-      .withColumn("dist_km", graft.operators.Geo.haversineKm(
+      .withColumn("dist_km", Geo.haversineKm(
         col("lat_a"), col("lon_a"), col("lat_b"), col("lon_b")))
       .filter(col("dist_km") <= radiusKm)
       .select(col("mmsi_a"), col("mmsi_b"), col("ts_a"), col("ts_b"),

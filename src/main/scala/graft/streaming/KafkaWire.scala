@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ais.{AvroCodec, PositionEvent, ShipInfoEvent}
+import graft.ais.{AvroCodec, PinnedRegistry, PositionEvent, ShipInfoEvent}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, Trigger}
@@ -103,18 +103,21 @@ object KafkaWire {
   /** The deploy topology in one call: decoded AIS branches → the reference's
     * two topics (README.md:197-200 — positions plain, info compacted; topic
     * cleanup policy is broker-side DDL, [[AisPipeline.latestInfo]] is the
-    * engine-side compaction twin). Returns unstarted writers; deploy code
+    * engine-side compaction twin). Each topic's frames carry its own
+    * [[PinnedRegistry]] schema id. Returns unstarted writers; deploy code
     * does `.start()` on each. */
   def pipelineWriters(raw: DataFrame, bootstrap: String,
       checkpointRoot: String,
       posTopic: String = "ship-position-events",
-      infoTopic: String = "ship-info-events",
-      schemaId: Int = 1): (DataStreamWriter[Row], DataStreamWriter[Row]) = {
+      infoTopic: String = "ship-info-events")
+      : (DataStreamWriter[Row], DataStreamWriter[Row]) = {
     import raw.sparkSession.implicits._
     val d = graft.ais.AisIngest.decode(
       raw.select(col("value").cast("string")).as[String])
-    val pos = AvroCodec.positionsToWire(graft.ais.AisIngest.positions(d), schemaId)
-    val info = AvroCodec.shipInfoToWire(graft.ais.AisIngest.shipInfo(d), schemaId)
+    val pos = AvroCodec.positionsToWire(graft.ais.AisIngest.positions(d),
+      PinnedRegistry.PositionId)
+    val info = AvroCodec.shipInfoToWire(graft.ais.AisIngest.shipInfo(d),
+      PinnedRegistry.ShipInfoId)
     (sinkWriter(pos, Endpoint(bootstrap, posTopic), s"$checkpointRoot/positions"),
       sinkWriter(info, Endpoint(bootstrap, infoTopic), s"$checkpointRoot/info"))
   }

@@ -236,6 +236,46 @@ class PropertySpec extends SparkSpec {
     assert(brute.nonEmpty)
   }
 
+  test("property: withinRadius equals brute-force haversine with polar " +
+    "ports (|lat| >= 80, both poles) at r = 800 km") {
+    import spark.implicits._
+    val r = 800.0
+    // disks that reach over a pole: the cover must widen to every longitude
+    val ports = (Seq((90.0, 0.0), (-90.0, 0.0), (85.0, 10.0), (-84.0, -170.0)) ++
+      sample(for {
+        lat <- Gen.oneOf(Gen.chooseNum(80.0, 89.99), Gen.chooseNum(-89.99, -80.0))
+        lon <- Gen.chooseNum(-180.0, 179.999)
+      } yield (lat, lon), 8, 17L)).zipWithIndex
+      .map { case ((la, lo), i) => (i.toLong, la, lo) }
+    val positions = (Seq((90.0, 45.0), (-90.0, -45.0)) ++ sample(for {
+      lat <- Gen.oneOf(Gen.chooseNum(70.0, 89.99), Gen.chooseNum(-89.99, -70.0))
+      lon <- Gen.chooseNum(-180.0, 179.999)
+    } yield (lat, lon), 1500, 18L)).zipWithIndex
+      .map { case ((la, lo), i) => (i.toLong, la, lo) }
+    val blocked = Geo.withinRadius(positions.toDF("pid", "lat", "lon"),
+        ports.toDF("port_id", "plat", "plon"), r)
+      .select(col("port_id"), col("pid")).collect()
+      .map(x => (x.getLong(0), x.getLong(1)))
+    assert(blocked.length == blocked.distinct.length, "pair emitted twice")
+    def hav(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
+      val dlat = math.toRadians(lat2 - lat1) / 2
+      val dlon = math.toRadians(lon2 - lon1) / 2
+      val a = math.sin(dlat) * math.sin(dlat) +
+        math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) *
+          math.sin(dlon) * math.sin(dlon)
+      2 * Geo.EarthR * math.asin(math.min(math.sqrt(a), 1.0))
+    }
+    val brute = for {
+      (pid, la, lo) <- positions; (qid, pa, po) <- ports
+      if math.floor(hav(pa, po, la, lo) * 1e4 + 0.5) / 1e4 <= r
+    } yield (qid, pid)
+    assert(brute.map(_._1).toSet == ports.map(_._1).toSet,
+      "every polar port has positions within r")
+    assert(blocked.toSet == brute.toSet,
+      s"blocked=${blocked.length} brute=${brute.length} " +
+        s"missing=${(brute.toSet -- blocked.toSet).take(5)}")
+  }
+
   test("property: BlockRangeJoins rewrite equals the naive plan on random data") {
     import org.scalacheck.Gen
     import spark.implicits._

@@ -40,6 +40,34 @@ class SpatialRuleSpec extends SparkSpec {
     assert(df.count() > 0)
   }
 
+  test("geo_radius_join plans through the rule: cell keys, a broadcast " +
+    "hash join, no nested loop, and no probe job") {
+    // incremented on the listener-bus thread, read on the test thread
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val df = graft.SparkEntry.queries("geo_radius_join")(spark, sf("sf0.001"))
+      val opt = df.queryExecution.optimizedPlan
+      df.queryExecution.executedPlan // physical planning runs no job either
+      org.apache.spark.GraftListenerBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext)
+      assert(jobs.get() == 0, s"building the plan ran ${jobs.get()} jobs")
+      assert(opt.collectFirst {
+        case n if n.output.exists(_.name.startsWith("__graft_cell")) => n
+      }.isDefined, opt.treeString)
+      assert(df.count() == 161L)
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("BroadcastHashJoin") &&
+        !p.contains("BroadcastNestedLoopJoin") &&
+        !p.contains("CartesianProduct"), p)
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
   test("rewrite returns exactly the nested-loop result") {
     setup()
     val withRule = spark.sql(radiusSql).collect()

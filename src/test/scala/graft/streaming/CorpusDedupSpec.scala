@@ -347,6 +347,26 @@ class EncounterAlertsSpec extends graft.SparkSpec {
     } finally q.stop()
   }
 
+  test("a 150 km radius alerts a pair two lat cells apart exactly once") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[PositionEvent]
+    def pos(mmsi: String, lat: Double, lon: Double, ts: Long) =
+      PositionEvent(mmsi, "under way using engine", ts, Gps(lat, lon), 10.0, 90)
+    val q = AisPipeline.encounterAlerts(input.toDS(), radiusKm = 150.0)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("enc_alerts_150_t").start()
+    try {
+      // cells 59 and 61, ~133.4 km apart: the disk spans three lat cells
+      input.addData(pos("X", 59.9, 5.0, 1000L), pos("Y", 61.1, 5.0, 1060L))
+      q.processAllAvailable()
+      val alerts = spark.table("enc_alerts_150_t")
+        .select(col("mmsi_a"), col("mmsi_b"))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(alerts == Seq(("X", "Y")), alerts)
+    } finally q.stop()
+  }
+
   test("join state is evicted once the watermark passes (bounded-state proof)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

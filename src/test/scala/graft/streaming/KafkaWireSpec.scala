@@ -81,6 +81,31 @@ class KafkaWireSpec extends SparkSpec {
     assert(optionsOf(info)("checkpointLocation") == "/tmp/ckpt-root/info")
   }
 
+  test("pipelineWriters frames each topic under its own registry schema id") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[String]
+    val (pos, info) = KafkaWire.pipelineWriters(
+      ms.toDF(), "rp:9092", "/tmp/ckpt-root")
+    // run each unstarted writer's frames into a memory sink instead of kafka
+    val qs = Seq(pos -> "kw_pos_wire", info -> "kw_info_wire").map {
+      case (w, name) =>
+        field[org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]](w, "ds")
+          .writeStream.format("memory").queryName(name).start()
+    }
+    try {
+      ms.addData(NmeaEncoder.position(1, 257000001L, 0, 12.3, 5.32, 60.39,
+        187, 1700000000L))
+      ms.addData(NmeaEncoder.staticVoyage(257000001L, "LAJX", "HAVFRUEN", 70,
+        "BERGEN", 1700000100L): _*)
+      qs.foreach(_.processAllAvailable())
+      assert(RegistryDecode.positionsFromWire(spark.table("kw_pos_wire"),
+        PinnedRegistry).collect().map(_.mmsi).toSeq == Seq("257000001"))
+      assert(RegistryDecode.shipInfoFromWire(spark.table("kw_info_wire"),
+        PinnedRegistry).collect().map(_.shipname).toSeq == Seq("HAVFRUEN"))
+    } finally qs.foreach(_.stop())
+  }
+
   test("wire round-trip: positions and info survive the kafka key/value shape") {
     import spark.implicits._
     val pos = Seq(
