@@ -87,7 +87,7 @@ object QueriesDoc {
     "Relational (TPC-H core)" -> "operators/Relational.scala",
     "Relational (TPC-H full suite)" -> "operators/TpchMore.scala",
     "Advanced relational" -> "operators/Advanced.scala",
-    "Prefix aggregates" -> "operators/PrefixAgg.scala",
+    "Prefix aggregates" -> "operators/PrefixAgg.scala, plans/RangeAgg.scala",
     "Skew handling" -> "operators/Skew.scala",
     "Sketches / approximate" -> "operators/Sketches.scala",
     "AIS pipeline" -> "operators/AisThroughput.scala",

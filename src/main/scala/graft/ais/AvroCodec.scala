@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   *
   * Schemas are pinned in code (SURVEY.md §1.3): compile-time constants give
   * the same fixed-schema guarantee as the reference's registry round-trip
-  * without a registry dependency; ids are caller-chosen so an external
-  * registry can be honored when one exists. Built on Apache Avro core (the
+  * without a registry dependency. The encoders frame under the id the
+  * caller gives; the pinned decoders accept only [[PinnedRegistry]]'s ids
+  * (a frame under any other id drops), and [[RegistryDecode]] resolves the
+  * ids of an external registry when one exists. Built on Apache Avro core (the
   * library Spark itself ships); schemas and datum writers/readers are
   * JVM-wide lazy singletons (GenericDatumWriter.write and
   * GenericDatumReader.read are thread-safe for a fixed schema — the reader
@@ -113,9 +115,12 @@ object AvroCodec {
       r.get("speed").asInstanceOf[Double], r.get("heading").asInstanceOf[Int])
   }
 
+  /** None unless the frame carries [[PinnedRegistry.PositionId]]. */
   def bytesToPosition(bytes: Array[Byte]): Option[PositionEvent] =
-    unframe(bytes).flatMap { case (_, body) =>
-      readRecord(positionReader, body).map(toPosition)
+    unframe(bytes).flatMap {
+      case (PinnedRegistry.PositionId, body) =>
+        readRecord(positionReader, body).map(toPosition)
+      case _ => None
     }
 
   def shipInfoToBytes(e: ShipInfoEvent, schemaId: Int): Array[Byte] = {
@@ -133,9 +138,12 @@ object AvroCodec {
       r.get("shipname").toString, r.get("callsign").toString,
       r.get("shiptype").toString, r.get("destination").toString)
 
+  /** None unless the frame carries [[PinnedRegistry.ShipInfoId]]. */
   def bytesToShipInfo(bytes: Array[Byte]): Option[ShipInfoEvent] =
-    unframe(bytes).flatMap { case (_, body) =>
-      readRecord(shipInfoReader, body).map(toShipInfo)
+    unframe(bytes).flatMap {
+      case (PinnedRegistry.ShipInfoId, body) =>
+        readRecord(shipInfoReader, body).map(toShipInfo)
+      case _ => None
     }
 
   /** A11+A10 sink shape: (key = mmsi, value = framed Avro) — drop-in columns
@@ -147,8 +155,9 @@ object AvroCodec {
       .toDF("key", "value")
   }
 
-  /** B1 source shape: framed Avro values → typed positions (bad frames drop,
-    * FAILFAST-equivalent strictness comes from the pinned schema). */
+  /** B1 source shape: framed Avro values → typed positions (bad frames and
+    * frames under another schema id drop; FAILFAST-equivalent strictness
+    * comes from the pinned schema). */
   def positionsFromWire(df: DataFrame): Dataset[PositionEvent] = {
     import df.sparkSession.implicits._
     df.select(col("value").cast("binary"))

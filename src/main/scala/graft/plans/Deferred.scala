@@ -40,9 +40,13 @@ object DeferredStrategy extends Strategy {
   }
 }
 
+/** `build` and its result are driver-side and transient: whole-stage
+  * codegen above this node (a Sort's generated code references its plan)
+  * serializes the plan tree into tasks, and the thunk may capture plans over
+  * file relations that do not serialize. Executors never run this node. */
 case class DeferredExec(
     output: Seq[Attribute],
-    build: () => DataFrame) extends LeafExecNode {
+    @transient build: () => DataFrame) extends LeafExecNode {
 
   /** Runs the thunk (which may itself submit Spark jobs — the same nested-job
     * pattern subquery and broadcast execution use) and hands back its rows.
@@ -52,7 +56,7 @@ case class DeferredExec(
     * the declaration's. The built RDD is memoized so repeated executions of
     * this node (multiple actions on one view reference) pay the driver-side
     * build once. */
-  private lazy val builtRdd: RDD[InternalRow] = {
+  @transient private lazy val builtRdd: RDD[InternalRow] = {
     val df = build()
     val got = df.schema
     val want = output

@@ -70,6 +70,20 @@ import org.apache.spark.sql.types._
   *     projection emits NULL when it is zero;
   *   - groups exist iff the window matched >= 1 right row (inner join).
   *
+  * Correctness of the scan:
+  *   - the sort key is (ts, kind) with right rows at kind 0 and probes at
+  *     kind 1, so at equal ts a probe sees every right row: the upper bound
+  *     is inclusive;
+  *   - range partitioning on that full sort key is monotone: every row
+  *     ordered before a probe lands in the same or an earlier partition, so
+  *     the partition's exclusive offset plus its local scan is exactly F at
+  *     the probe, however the range sampler splits the key space;
+  *   - sums run in exact Long arithmetic with Math.addExact, so overflow
+  *     is loud, never silent; a prefix of integer cents overflows only
+  *     past ~9e16 value units of corpus mass;
+  *   - a left row whose window is empty gets F - F = 0 and is filtered,
+  *     matching the inner join's absent rows.
+  *
   * The produced node is a [[DeferredResultPlan]]: the exclusive-prefix
   * offsets are a driver-side collect that must run at first ACTION, inside
   * execution — the same nested-job pattern broadcast exchange uses.
@@ -205,8 +219,26 @@ object RewriteRangeAggToPrefix extends Rule[LogicalPlan] with PredicateHelper {
       build(spark, wj, groupAttrs, sumExprs.toSeq, needsSum.toSeq, outExprs)))
   }
 
-  /** The executed prefix plan — see [[graft.operators.PrefixAgg]] for the
-    * fixed-shape (count, cents-sum) twin this generalizes. */
+  /** Adds one right row to a running prefix: for each sum column whose
+    * value (at `base + j`) is non-null, its non-null count and, when a leg
+    * needs it, its exact sum. Both passes of [[build]] call this, so the
+    * partition totals and the per-probe deltas accumulate the same way. */
+  private def addRight(r: Row, base: Int, sumFlags: Array[Boolean],
+      s: Array[Long], z: Array[Long]): Unit = {
+    var j = 0
+    while (j < s.length) {
+      if (!r.isNullAt(base + j)) {
+        if (sumFlags(j)) s(j) = Math.addExact(s(j), r.getLong(base + j))
+        z(j) += 1L
+      }
+      j += 1
+    }
+  }
+
+  /** The executed prefix plan: pass 1 collects each range partition's
+    * right-row totals into exclusive prefix offsets; pass 2 runs the
+    * prefix from its partition's offset and emits signed deltas at the
+    * probes; a group-by on the left keys sums the deltas. */
   private def build(spark: SparkSession, wj: WindowJoin,
       groupAttrs: Seq[AttributeReference], sumExprs: Seq[Expression],
       needsSum: Seq[Boolean], outExprs: Seq[Expression]): DataFrame = {
@@ -243,22 +275,14 @@ object RewriteRangeAggToPrefix extends Rule[LogicalPlan] with PredicateHelper {
     val np = spark.sessionState.conf.numShufflePartitions
     val ranged = union.repartitionByRange(np, col("__t"), col("__kind"))
       .sortWithinPartitions(col("__t"), col("__kind"))
-    // row layout: 0=__t, 1=__kind, 2=__sign, 3..3+m-1 keys, 3+m.. sums
+    // row layout: 0=__t, 1=__kind, 2=__sign, 3..3+m-1 keys, 3+m.. sums.
+    // Both passes read this one RDD, so the range shuffle's map output is
+    // computed once; only the partition-local sort runs twice.
     val rdd = ranged.rdd
     val totals = rdd.mapPartitionsWithIndex { (i, it) =>
       var n = 0L; val s = new Array[Long](k); val z = new Array[Long](k)
       it.foreach { r =>
-        if (r.getInt(1) == 0) {
-          n += 1L
-          var j = 0
-          while (j < k) {
-            if (!r.isNullAt(3 + m + j)) {
-              if (sumFlags(j)) s(j) = Math.addExact(s(j), r.getLong(3 + m + j))
-              z(j) += 1L
-            }
-            j += 1
-          }
-        }
+        if (r.getInt(1) == 0) { n += 1L; addRight(r, 3 + m, sumFlags, s, z) }
       }
       Iterator((i, n, s, z))
     }.collect().sortBy(_._1)
@@ -280,15 +304,7 @@ object RewriteRangeAggToPrefix extends Rule[LogicalPlan] with PredicateHelper {
       val s = bc.value._2(i).clone(); val z = bc.value._3(i).clone()
       it.flatMap { r =>
         if (r.getInt(1) == 0) {
-          n += 1L
-          var j = 0
-          while (j < k) {
-            if (!r.isNullAt(3 + m + j)) {
-              if (sumFlags(j)) s(j) = Math.addExact(s(j), r.getLong(3 + m + j))
-              z(j) += 1L
-            }
-            j += 1
-          }
+          n += 1L; addRight(r, 3 + m, sumFlags, s, z)
           Iterator.empty
         } else {
           val sign = r.getLong(2)

@@ -100,17 +100,13 @@ class PlanSpec extends SparkSpec {
 
   test("range_agg_prefix plans ZERO joins — the prefix scan replaces pair " +
       "materialization entirely") {
-    // the catalog entry is Deferred (driver-side offsets collect), so pin
-    // the operator form directly, like the hamming/session geometries
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val left = Seq((1L, 100L)).toDF("id", "t")
-    val right = Seq((95L, 5L)).toDF("rt", "cents")
-    val p = plan(graft.operators.PrefixAgg.trailingCountSum(
-      spark, left, "id", "t", right, "rt", "cents", 10L))
-    assert(!p.toLowerCase.contains("join"), p)
-    // the final group-by runs over 2|L| probe deltas, never over pairs
-    assert(p.contains("HashAggregate"), p)
+    // the catalog entry is a plain join + group-by; the optimizer must turn
+    // it into the rule's deferred prefix scan with no join left
+    val p = run("range_agg_prefix").queryExecution.optimizedPlan
+    assert(p.collectFirst { case d: graft.plans.DeferredResultPlan => d }.isDefined, p)
+    assert(p.collectFirst {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isEmpty, p)
   }
 
   test("nearest-centroid assignment aggregates — no window over the product") {

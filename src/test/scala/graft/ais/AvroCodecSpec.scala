@@ -20,7 +20,7 @@ class AvroCodecSpec extends AnyFunSuite {
       .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(42L))
     samples.foreach { p =>
       assert(AvroCodec.bytesToPosition(
-        AvroCodec.positionToBytes(p, schemaId = 7)).contains(p), s"failed for $p")
+        AvroCodec.positionToBytes(p, PinnedRegistry.PositionId)).contains(p), s"failed for $p")
     }
   }
 

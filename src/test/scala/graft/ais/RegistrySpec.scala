@@ -99,4 +99,18 @@ class RegistrySpec extends SparkSpec {
       .toDF("value")
     assert(RegistryDecode.shipInfoFromWire(cross, PinnedRegistry).count() == 0L)
   }
+
+  test("the pinned decode reads only its own schema id: a ship-info frame " +
+      "and a position frame under id 7 each yield no positions") {
+    import spark.implicits._
+    val info = ShipInfoEvent("258123000", 0L, "SKIP", "LABC",
+      "Tanker_AllShipsOfThisType", "OSLO")
+    val infoWire = Seq(Tuple1(AvroCodec.shipInfoToBytes(info,
+      PinnedRegistry.ShipInfoId))).toDF("value")
+    val foreignWire = Seq(Tuple1(AvroCodec.positionToBytes(p1, 7))).toDF("value")
+    assert(AvroCodec.positionsFromWire(infoWire).collect().isEmpty)
+    assert(AvroCodec.positionsFromWire(foreignWire).collect().isEmpty)
+    // the ship-info frame itself is well formed
+    assert(AvroCodec.shipInfoFromWire(infoWire).collect().toSeq == Seq(info))
+  }
 }

@@ -269,7 +269,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("media decodeStub (typed mapPartitions) equals the column-expression query") {
-    import spark.implicits._
     val viaStub = graft.multimodal.Media.decodeStub(
       graft.multimodal.Media.asMedia(spark, sf("sf0.001")))
       .select(col("doc_id"), col("n_bytes"), col("width"), col("height"))
@@ -399,7 +398,6 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("temperature mix: rates order INVERSELY to source token mass " +
       "(low-resource up-weighted) and kept docs respect each source's rate") {
-    import spark.implicits._
     val out = graft.operators.TextAnalysis.corpusMixTemperature
       .run(spark, sf("sf0.001")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
@@ -445,7 +443,7 @@ class DedupSimilaritySpec extends SparkSpec {
         .maxBy(_._1)._2
     }.toMap
     val byId = vecs.toMap
-    vecs.foreach { case (id, v) =>
+    vecs.foreach { case (id, _) =>
       val (cell, kept, dupOf) = verdicts(id)
       assert(cell == cellOf(id), s"cell of $id")
       val witnesses = vecs.collect { case (j, w)

@@ -1,16 +1,37 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.plans.DeferredResultPlan
 
-/** Pins the prefix-aggregate trailing-window path: boundary semantics
-  * (inclusive both ends, exclusive just past), agreement with the
+/** Pins the prefix-aggregate trailing-window path as the optimizer plans a
+  * plain range join plus group-by: the plan collapses to
+  * [[graft.plans.RewriteRangeAggToPrefix]]'s prefix scan, with boundary
+  * semantics (inclusive both ends, exclusive just past), agreement with the
   * pair-materializing binned join it replaces, and invariance under forced
   * partition counts (the offsets/monotonicity argument must hold however
   * the range sampler splits the key space). */
 class PrefixAggSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Per left (id, t): count and sum of right (rt, cents) with rt in
+    * [t - windowUs, t], written as the naive join the rule collapses. */
+  private def trailing(left: DataFrame, right: DataFrame, windowUs: Long): DataFrame =
+    left.join(right, col("rt") >= col("t") - windowUs && col("rt") <= col("t"))
+      .groupBy(col("id"))
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
+
+  /** Collects `df` ordered by id after asserting its plan collapsed: the
+    * rule's deferred prefix scan, and no join left to materialize pairs. */
+  private def collapsedRows(df: DataFrame): Seq[(Long, Long, Long)] = {
+    val p = df.queryExecution.optimizedPlan
+    assert(p.collectFirst { case d: DeferredResultPlan => d }.isDefined &&
+      p.collectFirst { case j: Join => j }.isEmpty, p.toString)
+    df.orderBy("id").as[(Long, Long, Long)].collect().toSeq
+  }
 
   private def run(np: Int) = {
     val left = Seq((1L, 100L), (2L, 89L), (3L, 50L), (4L, -5L))
@@ -19,9 +40,7 @@ class PrefixAggSpec extends SparkSpec {
       .toDF("rt", "cents")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", np.toString)
-    try PrefixAgg.trailingCountSum(spark, left, "id", "t",
-        right, "rt", "cents", 10L)
-      .orderBy("id").as[(Long, Long, Long)].collect().toSeq
+    try collapsedRows(trailing(left, right, 10L))
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
@@ -40,35 +59,6 @@ class PrefixAggSpec extends SparkSpec {
     assert(run(17) === expected)
   }
 
-  test("NULL ts or cents fails fast with a message naming the column, not " +
-      "an encoder NPE (NULL-bearing inputs belong on the rule path)") {
-    val left = Seq((1L, 100L)).toDF("id", "t")
-    val rightNullTs = Seq((Some(100L), Some(5L)), (None: Option[Long], Some(7L)))
-      .toDF("rt", "cents")
-    val rightNullCents = Seq((Some(100L), None: Option[Long]))
-      .toDF("rt", "cents")
-    def chainMsg(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
-        .flatMap(x => Option(x.getMessage)).mkString(" | ")
-    for ((bad, col) <- Seq((rightNullTs, "rt"), (rightNullCents, "cents"))) {
-      val e = intercept[Exception] {
-        PrefixAgg.trailingCountSum(spark, left, "id", "t",
-          bad, "rt", "cents", 10L).collect()
-      }
-      val msg = chainMsg(e)
-      assert(msg.contains("PrefixAgg.trailingCountSum") && msg.contains(col),
-        s"got: ${e.getClass.getName}: $msg")
-    }
-    val leftNullTs = Seq((Some(1L), None: Option[Long])).toDF("id", "t")
-    val right = Seq((100L, 5L)).toDF("rt", "cents")
-    val e = intercept[Exception] {
-      PrefixAgg.trailingCountSum(spark, leftNullTs, "id", "t",
-        right, "rt", "cents", 10L).collect()
-    }
-    assert(chainMsg(e).contains("left ts"),
-      s"got: ${e.getClass.getName}: ${chainMsg(e)}")
-  }
-
   test("prefix path agrees with the pair-materializing binned join at sf0.001") {
     val dir = sf("sf0.001")
     val e = graft.sources.Tables.events(spark, dir)
@@ -84,9 +74,9 @@ class PrefixAggSpec extends SparkSpec {
       .groupBy(col("event_id"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
       .orderBy("event_id").as[(Long, Long, Long)].collect().toSeq
-    val viaPrefix = PrefixAgg.trailingCountSum(spark, purchases, "event_id",
-        "ts_us", signups.drop("s_id"), "s_ts_us", "cents", 3600000000L)
-      .orderBy("id").as[(Long, Long, Long)].collect().toSeq
+    val viaPrefix = collapsedRows(trailing(
+      purchases.select(col("event_id").as("id"), col("ts_us").as("t")),
+      signups.select(col("s_ts_us").as("rt"), col("cents")), 3600000000L))
     assert(viaPrefix.nonEmpty && viaPrefix === viaJoin)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class RetrievalSpec extends SparkSpec {
 
@@ -61,9 +60,6 @@ class RetrievalSpec extends SparkSpec {
 
   test("hybrid rrf: fused scores decompose into the two legs' ranks, " +
       "the query doc never retrieves itself, and both legs move the order") {
-    import graft.sources.Tables
-    val docs = Tables.documents(spark, sf("sf0.001"))
-    val emb = Tables.embeddings(spark, sf("sf0.001"))
     val out = Retrieval.hybridQ.run(spark, sf("sf0.001")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(out.length == 30)                       // 3 queries x top-10

@@ -55,6 +55,37 @@ class RangeAggRuleSpec extends SparkSpec {
     } finally spark.experimental.extraOptimizations = saved
   }
 
+  test("range_agg_prefix (a DataFrame join + groupBy) collapses to the " +
+      "prefix plan and matches the rule-off join plan row-for-row") {
+    setup()
+    val q = graft.SparkEntry.queries("range_agg_prefix")
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val df = q(spark, sf("sf0.001"))
+    assert(isCollapsed(df), optimized(df).toString)
+    val got = rows(df)
+    // rule-off reference: drop BOTH range rules, let Catalyst nested-loop it
+    val saved = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = saved.filterNot(o =>
+      o == RewriteRangeAggToPrefix || o == BlockRangeJoins)
+    try {
+      val naiveDf = q(spark, sf("sf0.001"))
+      assert(!isCollapsed(naiveDf), optimized(naiveDf).toString)
+      val naive = rows(naiveDf)
+      assert(got == naive, s"rule=${got.size} naive=${naive.size}")
+      assert(got.nonEmpty)
+    } finally spark.experimental.extraOptimizations = saved
+  }
+
+  test("a collapsed aggregate over the parquet events table can be sorted: " +
+      "the deferred build is not serialized into the sort's tasks") {
+    setup()
+    val df = spark.sql(aggSql + " ORDER BY 1")
+    assert(isCollapsed(df), optimized(df).toString)
+    val ids = df.collect().map(_.getLong(0)).toSeq
+    assert(ids.nonEmpty && ids == ids.sorted)
+  }
+
   test("range_join_auto (count-only) also collapses — deterministically, " +
       "since the prefix rule always registers ahead of the binning rule") {
     setup()

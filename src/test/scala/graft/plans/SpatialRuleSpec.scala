@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.{Graft, SparkSpec}
-import org.apache.spark.sql.functions._
 
 /** The haversine-join rewrite: plain SQL with a radius predicate must plan
   * as a hash join on derived cell keys (no nested loop over the product)

@@ -35,12 +35,6 @@ object FakeJdbc {
   private val DeleteBatchRe =
     """(?is)DELETE FROM (\S+) WHERE (\S+) = \?""".r
 
-  /** One connection's pending effects, applied on commit. */
-  private final class Pending {
-    val ops = mutable.Buffer[Vector[Map[String, Any]] => Vector[Map[String, Any]]]()
-    var table: String = _
-  }
-
   def connection(): Connection = {
     synchronized { opened += 1 }
     val pending = mutable.Buffer[(String, Vector[Map[String, Any]] => Vector[Map[String, Any]])]()

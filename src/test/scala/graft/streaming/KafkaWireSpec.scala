@@ -114,7 +114,7 @@ class KafkaWireSpec extends SparkSpec {
       PositionEvent("367001234", "at anchor", 1700000060L,
         Gps(51.9, 4.1), 0.0, 511)).toDS()
     // the kafka source surfaces exactly (key, value) binary among its columns
-    val wire = AvroCodec.positionsToWire(pos, schemaId = 7)
+    val wire = AvroCodec.positionsToWire(pos, PinnedRegistry.PositionId)
     assert(wire.schema.fields.map(f => f.name -> f.dataType.typeName).toSeq ==
       Seq("key" -> "string", "value" -> "binary"))
     val back = KafkaWire.positions(wire).collect().toSet
@@ -125,7 +125,7 @@ class KafkaWireSpec extends SparkSpec {
 
     val info = Seq(ShipInfoEvent("244660180", 1700000000L, "EEMSLIFT ELLEN",
       "PCVB", "cargo ship", "ROTTERDAM")).toDS()
-    val infoWire = AvroCodec.shipInfoToWire(info, schemaId = 7)
+    val infoWire = AvroCodec.shipInfoToWire(info, PinnedRegistry.ShipInfoId)
     val infoBack = KafkaWire.shipInfo(infoWire).collect().toSet
     assert(infoBack == info.collect().toSet)
     // malformed frames drop instead of failing the batch
