@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Dumps formatted physical plans for the headline queries to PLANS.md —
   * the judge-facing evidence that scans prune, filters push down, dimensions
   * broadcast, and hot paths stay in WholeStageCodegen. PlanSpec asserts the
-  * same properties in CI form. `sbt "runMain graft.Plans"`. */
+  * same properties in CI form. `sbt "runMain graft.Plans <sfDir>"`, run on
+  * the sf0.001 tables. */
 object Plans {
   val headline: Seq[String] = Seq(
     "q1_pricing_summary", "q5_region_revenue", "d3_join_info", "d4_join_limit",
@@ -47,17 +48,19 @@ object Plans {
     "eval_bootstrap_ci", "dp_release_class_sizes")
 
   def main(args: Array[String]): Unit = {
+    val Array(sfDir) = args
     val spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    sb.append("# PLANS — physical plans of the headline queries (sf0.001)\n\n")
-    sb.append("Generated by `sbt \"runMain graft.Plans\"`. Properties asserted " +
+    sb.append("# PLANS — physical plans of the headline queries " +
+      s"(${Paths.get(sfDir).getFileName})\n\n")
+    sb.append("Generated by `sbt \"runMain graft.Plans <sfDir>\"`. Properties asserted " +
       "in PlanSpec: parquet PushedFilters/ReadSchema pruning, BroadcastHashJoin " +
       "on dimension sides, TakeOrderedAndProject for ordered limits, " +
       "WindowGroupLimit below the latest-per-key shuffle, two-phase " +
       "HashAggregate, WholeStageCodegen coverage.\n")
     headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n```\n")
       sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim)
       sb.append("\n```\n")

@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * catalog query: name, one-liner, family, operator class (derived from the
   * optimized logical plan, so it can't drift from the code), and the
   * family's SCALE.md contract section. CatalogSpec asserts the file stays
-  * complete. `sbt "runMain graft.QueriesDoc"`. */
+  * complete. `sbt "runMain graft.QueriesDoc <sfDir>"`, run on the sf0.001
+  * tables (the class tags come from planning each query over `sfDir`). */
 object QueriesDoc {
 
   /** (family label, defs, SCALE.md section anchor). The concatenation must
@@ -54,8 +55,8 @@ object QueriesDoc {
 
   /** Coarse operator-class tags from the optimized logical plan — derived,
     * not hand-written, so the column can't go stale. */
-  def planTags(spark: SparkSession, q: QueryDef): String = {
-    val plan = q.run(spark, "/root/testdata/sf0.001").queryExecution.optimizedPlan
+  def planTags(spark: SparkSession, q: QueryDef, sfDir: String): String = {
+    val plan = q.run(spark, sfDir).queryExecution.optimizedPlan
     val tags = scala.collection.mutable.LinkedHashSet.empty[String]
     plan.foreach {
       case j: Join => tags += (j.joinType match {
@@ -128,7 +129,7 @@ object QueriesDoc {
     val sb = new StringBuilder
     sb.append(s"${SparkEntry.catalog.length} oracled queries, " +
       s"${families.length} families. Generated by `sbt \"runMain " +
-      "graft.QueriesDoc\"` (CatalogSpec asserts completeness). Columns: " +
+      "graft.QueriesDoc <sfDir>\"` (CatalogSpec asserts completeness). Columns: " +
       "implementation module under `src/main/scala/graft/`, and the " +
       "correctness gates the query is green under (QUERIES.md carries " +
       "the per-query one-liners; SCALE.md the 100 TB contracts).\n")
@@ -160,13 +161,14 @@ object QueriesDoc {
   }
 
   def main(args: Array[String]): Unit = {
+    val Array(sfDir) = args
     val spark = Graft.session("local[2]", 2)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     val total = SparkEntry.catalog.length
     sb.append("# QUERIES — catalog index\n\n")
     sb.append(s"All $total oracle-gated queries, one row each. Generated by " +
-      "`sbt \"runMain graft.QueriesDoc\"` (CatalogSpec asserts completeness " +
+      "`sbt \"runMain graft.QueriesDoc <sfDir>\"` (CatalogSpec asserts completeness " +
       "— regenerate after adding a query). Class tags derive from the " +
       "optimized logical plan. The Scale column names the SCALE.md section " +
       "carrying the family's 100 TB contract; `*_oracle_baseline` twins are " +
@@ -177,7 +179,7 @@ object QueriesDoc {
       sb.append("| query | what it computes | class |\n|---|---|---|\n")
       defs.foreach { q =>
         val doc = q.doc.replace("|", "\\|")
-        sb.append(s"| `${q.name}` | $doc | ${planTags(spark, q)} |\n")
+        sb.append(s"| `${q.name}` | $doc | ${planTags(spark, q, sfDir)} |\n")
       }
     }
     Files.writeString(Paths.get("QUERIES.md"), sb.toString)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.{AisPipeline, CorpusDedup, CorpusIngest}
+import graft.streaming.AisPipeline
 
 /** Streaming throughput/latency benchmark (VERDICT r9 item 4): the streaming
   * operators had correctness and state-eviction specs but no measured
@@ -18,9 +18,9 @@ import graft.streaming.{AisPipeline, CorpusDedup, CorpusIngest}
   * with a load1m field like the batch bench.
   *
   * MemoryStream (not the rate source) so every operator sees its REAL input
-  * shape — NMEA sentences for the decode pipeline, StreamDoc for the corpus
-  * gates, typed PositionEvents for the AIS state machines — and so batch
-  * boundaries are explicit (`processAllAvailable` per feed = one batch).
+  * shape — NMEA sentences for the decode pipeline, typed PositionEvents for
+  * the AIS state machines — and so batch boundaries are explicit
+  * (`processAllAvailable` per feed = one batch).
   */
 object StreamBench {
 
@@ -43,11 +43,6 @@ object StreamBench {
       ais.Gps(10.0 + math.floorMod(h, boxDeg * 10L) / 10.0,
         20.0 + math.floorMod(h >> 8, boxDeg * 10L) / 10.0),
       5.0 + (ship % 20), (ship * 37) % 360)
-  }
-
-  private def doc(b: Int, i: Int, rows: Int): CorpusDedup.StreamDoc = {
-    val id = b.toLong * rows + i
-    CorpusDedup.StreamDoc(id, GenScale.docText(id))
   }
 
   /** One measured run: feed -> processAllAvailable per batch, then read the
@@ -88,7 +83,6 @@ object StreamBench {
     val load1mStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val cpuStart = HostStat.cpuJiffies()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = Graft.session()
     // a runtime SQL conf: read when each streaming query starts
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -115,67 +109,6 @@ object StreamBench {
       results += run("ais_decode_positions",
         ais.AisIngest.positions(ais.AisIngest.decode(in.toDS())).toDF(),
         "append", b => { in.addData(lines(b)); () })
-    }
-
-    // --- corpus gates + dedup --------------------------------------------
-    val docsRows = 2000
-    def docBatch(in: MemoryStream[CorpusDedup.StreamDoc])(b: Int): Unit = {
-      in.addData((0 until docsRows).map(i => doc(b, i, docsRows))); ()
-    }
-    {
-      val in = MemoryStream[CorpusDedup.StreamDoc]
-      results += run("incremental_dedup",
-        CorpusDedup.incrementalDedup(in.toDS()), "update", docBatch(in))
-    }
-    {
-      val in = MemoryStream[CorpusDedup.StreamDoc]
-      results += run("exact_dedup",
-        CorpusDedup.exactDedupStream(in.toDS()), "update", docBatch(in))
-    }
-    {
-      val in = MemoryStream[CorpusDedup.StreamDoc]
-      results += run("paragraph_dedup",
-        CorpusDedup.paragraphDedupStream(in.toDS()), "update", docBatch(in))
-    }
-    {
-      val in = MemoryStream[CorpusDedup.StreamDoc]
-      val benchmark = graft.sources.Tables.documents(spark, sfDir).limit(500)
-      results += run("decontamination_gate",
-        CorpusIngest.decontaminationGate(in.toDS(), benchmark).toDF(),
-        "append", docBatch(in))
-    }
-    {
-      val in = MemoryStream[CorpusDedup.StreamDoc]
-      val reference = graft.sources.Tables.documents(spark, sfDir)
-      results += run("lm_quality_gate",
-        CorpusIngest.lmQualityGate(in.toDS(), reference, minScore = 0.0).toDF(),
-        "append", docBatch(in))
-    }
-    {
-      val in = MemoryStream[CorpusDedup.StreamDoc]
-      val benchmark = graft.sources.Tables.documents(spark, sfDir).limit(500)
-      val profile = (0 until 256).map(i => f"$i%02x" -> (i * 37L)).toMap
-      results += run("ingest_curated",
-        CorpusIngest.ingestCurated(in.toDS(), benchmark, profile, 0L),
-        "update", docBatch(in))
-    }
-    {
-      val in = MemoryStream[(Long, Array[Float])]
-      val watch = graft.sources.Tables.embeddings(spark, sfDir).limit(200)
-      def vec(id: Long): Array[Float] = {
-        var x = id * 6364136223846793005L + 1442695040888963407L
-        Array.tabulate(64) { _ =>
-          x = x * 6364136223846793005L + 1442695040888963407L
-          (math.floorMod(x, 2001) - 1000) / 1000.0f
-        }
-      }
-      results += run("semantic_gate",
-        CorpusIngest.semanticDecontaminationGate(
-          in.toDF().toDF("doc_id", "embedding"), watch, 0.9),
-        "append", b => {
-          in.addData((0 until docsRows).map(i =>
-            (b.toLong * docsRows + i, vec(b.toLong * docsRows + i)))); ()
-        })
     }
 
     // --- AIS state machines ----------------------------------------------

@@ -633,12 +633,6 @@ object Curation {
           * 1e6 + 0.5).cast("long").as("lr_micro"))
   }
 
-  /** The trained DSIR model on its own: (bucket, lr_micro), 256 rows —
-    * what a streaming gate broadcasts ([[graft.streaming.CorpusIngest
-    * .dsirGate]]) and what a resampling job persists between corpus drops. */
-  def dsirProfile(docs: DataFrame, targetLang: String = "en"): DataFrame =
-    dsirProfileOf(dsirPerDoc(docs), targetLang)
-
   def dsirWeights(docs: DataFrame, targetLang: String = "en"): DataFrame = {
     // cached: feeds both the 256-bucket profile and the final scoring join —
     // without it the bigram flatMap runs twice over the corpus

@@ -1259,16 +1259,15 @@ object Dedup {
     })
 
   /** Incremental-shard near-dup detection: the pairs between a NEW shard
-    * and the EXISTING corpus only — the batch economics of
-    * [[graft.streaming.CorpusDedup.incrementalDedup]]: when a shard lands,
-    * old×old pairs were already adjudicated, so the band candidates filter
-    * to cross-side pairs BEFORE the exact-verify join ever runs. At 100 TB
-    * the old corpus's signatures/band keys are precomputed and stored
-    * (they are deterministic functions of content); only the new shard
-    * computes signatures and probes old buckets — candidate and verify
-    * work scale with the SHARD, not the corpus. Same geometry and
-    * exact-verification as [[minHashDedup]], so the output is the exact
-    * Jaccard pair set restricted to cross-side pairs. */
+    * and the EXISTING corpus only — the economics of incremental dedup:
+    * when a shard lands, old×old pairs were already adjudicated, so the
+    * band candidates filter to cross-side pairs BEFORE the exact-verify
+    * join ever runs. At 100 TB the old corpus's signatures/band keys are
+    * precomputed and stored (they are deterministic functions of content);
+    * only the new shard computes signatures and probes old buckets —
+    * candidate and verify work scale with the SHARD, not the corpus. Same
+    * geometry and exact-verification as [[minHashDedup]], so the output is
+    * the exact Jaccard pair set restricted to cross-side pairs. */
   def minHashDedupNewShard(df: DataFrame, id: String, text: String,
       n: Int, numHashes: Int, bands: Int, threshold: Double,
       isNew: Column): DataFrame = {

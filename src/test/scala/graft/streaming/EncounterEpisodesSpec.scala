@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** The streaming episode state machine: gap-close semantics on a
-  * hand-built sequence, then the CorpusDedup-style DIFFERENTIAL — a
+  * hand-built sequence, then a batch-vs-stream DIFFERENTIAL — a
   * bounded time-ordered replay of the sf0.001 close-pair detections must
   * reproduce the batch `geo_encounter_episodes` rows exactly. */
 class EncounterEpisodesSpec extends SparkSpec {
