@@ -46,15 +46,20 @@ object StreamBench {
   }
 
   /** One measured run: feed -> processAllAvailable per batch, then read the
-    * per-batch progress Spark recorded. */
+    * per-batch progress Spark recorded. `feed` returns the rows it added:
+    * those, not the progress's `numInputRows`, are the measured rows, since
+    * a query that reads its source twice (a self-join) counts each row
+    * twice there. */
   private def run(name: String, out: DataFrame, mode: String,
-      feed: Int => Unit): Res = {
+      feed: Int => Int): Res = {
     val q = out.writeStream.outputMode(mode).format("noop").start()
     try {
-      (0 until Batches).foreach { b => feed(b); q.processAllAvailable() }
+      val fed = (0 until Batches).map { b =>
+        val n = feed(b); q.processAllAvailable(); n
+      }
       val prog = q.recentProgress.toSeq.filter(_.numInputRows > 0)
       val meas = prog.drop(Warm)
-      val inRows = meas.map(_.numInputRows).sum
+      val inRows = fed.drop(Warm).map(_.toLong).sum
       val ms = meas.map(_.batchDuration)
       val st = meas.flatMap(_.stateOperators.headOption)
       Res(name,
@@ -108,15 +113,16 @@ object StreamBench {
       }
       results += run("ais_decode_positions",
         ais.AisIngest.positions(ais.AisIngest.decode(in.toDS())).toDF(),
-        "append", b => { in.addData(lines(b)); () })
+        "append", b => { val ls = lines(b); in.addData(ls); ls.size })
     }
 
     // --- AIS state machines ----------------------------------------------
     val posRows = 10000
     def posBatch(in: MemoryStream[ais.PositionEvent], nShips: Int = 500,
-        boxDeg: Int = 20)(b: Int): Unit = {
+        boxDeg: Int = 20)(b: Int): Int = {
       in.addData((0 until posRows).map(i =>
-        position(b, i, posRows, nShips, boxDeg, 600L))); ()
+        position(b, i, posRows, nShips, boxDeg, 600L)))
+      posRows
     }
     {
       val in = MemoryStream[ais.PositionEvent]
@@ -142,7 +148,8 @@ object StreamBench {
             ais.ShipInfoEvent(s"S$ship", 1700000000L + b * 600L + i / 20,
               s"SHIP$ship", s"LA${ship % 97}X", "Cargo",
               if (b % 3 == 0) "BERGEN" else "OSLO")
-          }); ()
+          })
+          posRows
         })
     }
     {
@@ -169,7 +176,8 @@ object StreamBench {
               hour * streaming.EncounterEpisodes.binMs + (i / 500) * 60000L)
             streaming.EncounterEpisodes.Detection(pair, pair + 100000L, t,
               1.0 + (i % 50))
-          }); ()
+          })
+          posRows
         })
     }
 

@@ -8,6 +8,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import scala.collection.concurrent.TrieMap
 
 /** Avro serialization in the Confluent wire format (A11/B1, SURVEY.md §2.A):
   * magic byte 0x00 + 4-byte big-endian schema id + Avro binary body — the
@@ -17,14 +18,16 @@ import org.apache.spark.sql.functions._
   * Schemas are pinned in code (SURVEY.md §1.3): compile-time constants give
   * the same fixed-schema guarantee as the reference's registry round-trip
   * without a registry dependency. The encoders frame under the id the
-  * caller gives; the pinned decoders accept only [[PinnedRegistry]]'s ids
-  * (a frame under any other id drops), and [[RegistryDecode]] resolves the
-  * ids of an external registry when one exists. Built on Apache Avro core (the
-  * library Spark itself ships); schemas and datum writers/readers are
-  * JVM-wide lazy singletons (GenericDatumWriter.write and
-  * GenericDatumReader.read are thread-safe for a fixed schema — the reader
-  * resolves via a thread-local), so the per-record hot path allocates only
-  * the output buffer and encoder, never re-parses schema JSON.
+  * caller gives; the decoders resolve the WRITER schema by the frame's id
+  * through a [[RegistryClient]] — [[PinnedRegistry]] unless the caller
+  * passes another — and read the body against the pinned READER schema, so
+  * a frame under an unknown id drops and an evolved writer schema decodes.
+  * Built on Apache Avro core (the library Spark itself ships); schemas,
+  * datum writers and the resolved readers are JVM-wide singletons
+  * (GenericDatumWriter.write and GenericDatumReader.read are thread-safe
+  * for fixed schemas — the reader resolves via a thread-local), so the
+  * per-record hot path allocates only the buffer and the encoder or
+  * decoder, never re-parses schema JSON or builds a reader.
   */
 object AvroCodec {
 
@@ -55,9 +58,7 @@ object AvroCodec {
   lazy val shipInfoSchema: Schema = new Schema.Parser().parse(shipInfoSchemaJson)
 
   private lazy val positionWriter = new GenericDatumWriter[GenericRecord](positionSchema)
-  private lazy val positionReader = new GenericDatumReader[GenericRecord](positionSchema)
   private lazy val shipInfoWriter = new GenericDatumWriter[GenericRecord](shipInfoSchema)
-  private lazy val shipInfoReader = new GenericDatumReader[GenericRecord](shipInfoSchema)
 
   private val Magic: Byte = 0x00
 
@@ -84,13 +85,31 @@ object AvroCodec {
 
   /** None when the body does not parse against the schema — a framed but
     * corrupt (or wrong-schema) payload quarantines like a bad frame instead
-    * of failing the micro-batch (the B1 drop contract). [[RegistryDecode]]
-    * reads through here too, with readers resolved for evolved writer
-    * schemas. */
-  private[ais] def readRecord(reader: GenericDatumReader[GenericRecord],
+    * of failing the micro-batch (the B1 drop contract). */
+  private def readRecord(reader: GenericDatumReader[GenericRecord],
       body: Array[Byte]): Option[GenericRecord] =
     try Some(reader.read(null, DecoderFactory.get().binaryDecoder(body, null)))
     catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Readers by (registry, writer id, reader schema), memoized JVM-wide: a
+    * registered id names an immutable schema, so each registry is asked
+    * once per id — the cache discipline of Confluent's client. Only hits
+    * are kept, so frames under made-up ids cannot grow the map. */
+  private val readers = TrieMap.empty[(RegistryClient, Int, Schema),
+    GenericDatumReader[GenericRecord]]
+
+  /** Unframe, resolve the writer schema by the frame's id, read against
+    * `readerSchema`; None for a bad frame, an unknown id or a body that
+    * does not resolve. */
+  private def decode(bytes: Array[Byte], registry: RegistryClient,
+      readerSchema: Schema): Option[GenericRecord] =
+    unframe(bytes).flatMap { case (id, body) =>
+      val key = (registry, id, readerSchema)
+      readers.get(key).orElse(registry.schemaById(id).map(w =>
+        readers.getOrElseUpdate(key,
+          new GenericDatumReader[GenericRecord](w, readerSchema))))
+        .flatMap(readRecord(_, body))
+    }
 
   def positionToBytes(p: PositionEvent, schemaId: Int): Array[Byte] = {
     val schema = positionSchema
@@ -106,7 +125,7 @@ object AvroCodec {
 
   /** A record read against [[positionSchema]] (pinned or resolved from an
     * evolved writer schema) as the engine's event. */
-  private[ais] def toPosition(r: GenericRecord): PositionEvent = {
+  private def toPosition(r: GenericRecord): PositionEvent = {
     val gps = r.get("location").asInstanceOf[GenericRecord]
     PositionEvent(
       r.get("mmsi").toString, r.get("status").toString,
@@ -115,13 +134,11 @@ object AvroCodec {
       r.get("speed").asInstanceOf[Double], r.get("heading").asInstanceOf[Int])
   }
 
-  /** None unless the frame carries [[PinnedRegistry.PositionId]]. */
-  def bytesToPosition(bytes: Array[Byte]): Option[PositionEvent] =
-    unframe(bytes).flatMap {
-      case (PinnedRegistry.PositionId, body) =>
-        readRecord(positionReader, body).map(toPosition)
-      case _ => None
-    }
+  /** None unless `registry` maps the frame's id to a writer schema that
+    * resolves against [[positionSchema]] and the body reads under it. */
+  def bytesToPosition(bytes: Array[Byte],
+      registry: RegistryClient = PinnedRegistry): Option[PositionEvent] =
+    decode(bytes, registry, positionSchema).map(toPosition)
 
   def shipInfoToBytes(e: ShipInfoEvent, schemaId: Int): Array[Byte] = {
     val schema = shipInfoSchema
@@ -133,18 +150,15 @@ object AvroCodec {
   }
 
   /** A record read against [[shipInfoSchema]] as the engine's event. */
-  private[ais] def toShipInfo(r: GenericRecord): ShipInfoEvent =
+  private def toShipInfo(r: GenericRecord): ShipInfoEvent =
     ShipInfoEvent(r.get("mmsi").toString, r.get("timestamp").asInstanceOf[Long],
       r.get("shipname").toString, r.get("callsign").toString,
       r.get("shiptype").toString, r.get("destination").toString)
 
-  /** None unless the frame carries [[PinnedRegistry.ShipInfoId]]. */
-  def bytesToShipInfo(bytes: Array[Byte]): Option[ShipInfoEvent] =
-    unframe(bytes).flatMap {
-      case (PinnedRegistry.ShipInfoId, body) =>
-        readRecord(shipInfoReader, body).map(toShipInfo)
-      case _ => None
-    }
+  /** [[bytesToPosition]]'s twin against [[shipInfoSchema]]. */
+  def bytesToShipInfo(bytes: Array[Byte],
+      registry: RegistryClient = PinnedRegistry): Option[ShipInfoEvent] =
+    decode(bytes, registry, shipInfoSchema).map(toShipInfo)
 
   /** A11+A10 sink shape: (key = mmsi, value = framed Avro) — drop-in columns
     * for a Kafka sink (`writeStream.format("kafka")` binds key/value binary
@@ -156,13 +170,15 @@ object AvroCodec {
   }
 
   /** B1 source shape: framed Avro values → typed positions (bad frames and
-    * frames under another schema id drop; FAILFAST-equivalent strictness
-    * comes from the pinned schema). */
-  def positionsFromWire(df: DataFrame): Dataset[PositionEvent] = {
+    * frames under an id `registry` does not resolve to a position schema
+    * drop; FAILFAST-equivalent strictness comes from the pinned reader
+    * schema). */
+  def positionsFromWire(df: DataFrame,
+      registry: RegistryClient = PinnedRegistry): Dataset[PositionEvent] = {
     import df.sparkSession.implicits._
     df.select(col("value").cast("binary"))
       .as[Array[Byte]]
-      .flatMap(bytesToPosition(_))
+      .flatMap(bytesToPosition(_, registry))
   }
 
   /** B7 sink shape for the info branch (compacted topic, key = mmsi —
@@ -175,10 +191,11 @@ object AvroCodec {
   }
 
   /** Source twin of [[shipInfoToWire]]. */
-  def shipInfoFromWire(df: DataFrame): Dataset[ShipInfoEvent] = {
+  def shipInfoFromWire(df: DataFrame,
+      registry: RegistryClient = PinnedRegistry): Dataset[ShipInfoEvent] = {
     import df.sparkSession.implicits._
     df.select(col("value").cast("binary"))
       .as[Array[Byte]]
-      .flatMap(bytesToShipInfo(_))
+      .flatMap(bytesToShipInfo(_, registry))
   }
 }

@@ -1,8 +1,6 @@
 package graft.ais
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.Dataset
 
 /** The enrichment stage (SURVEY.md §2.B): position events + per-location
   * current weather → flattened PositionWithWeather, replacing the reference's
@@ -51,8 +49,8 @@ class FixtureWeatherClient extends WeatherClient {
 
 /** Live WeatherAPI.com client (lib/weather.py:8-30's role): one pooled
   * java.net.http client per instance (= per partition under mapPartitions —
-  * the pooling the reference got from its HTTPS singleton), JSON parsed with
-  * the same field discipline as Enrich.parseWeatherJson. Zero-egress test
+  * the pooling the reference got from its HTTPS singleton), each response
+  * parsed by [[HttpWeatherClient.parse]]. Zero-egress test
   * environments never construct it (WEATHER_API_KEY unset → fixture client).
   *
   * Operational posture (SURVEY §7.4.3): calls are rate-limited to the API's
@@ -131,9 +129,10 @@ class HttpWeatherClient(apiKey: String,
     None
   }
 
-  /** Same drop rules as the reference (consumer:42-50): error key or missing
-    * location/current → None. Minimal hand parse to avoid a JSON dependency
-    * outside Spark. */
+  /** B3+B4 — the reference's drop rules (consumer:39-50): a non-JSON body,
+    * an error key or a missing location/current → None; otherwise the
+    * nested fields the reference reads (consumer:51-60). Minimal hand parse
+    * to avoid a JSON dependency outside Spark. */
   private[ais] def parse(body: String): Option[WeatherInfo] = {
     def str(key: String): Option[String] =
       s""""$key"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""".r
@@ -160,36 +159,6 @@ object HttpWeatherClient {
 }
 
 object Enrich {
-
-  /** Schema of a WeatherAPI current-conditions response — the subset the
-    * reference reads (consumer:51-60). */
-  val weatherResponseSchema: StructType = StructType(Seq(
-    StructField("location", StructType(Seq(
-      StructField("name", StringType), StructField("region", StringType),
-      StructField("country", StringType)))),
-    StructField("current", StructType(Seq(
-      StructField("condition", StructType(Seq(StructField("text", StringType)))),
-      StructField("temp_f", DoubleType), StructField("wind_mph", DoubleType),
-      StructField("wind_dir", StringType)))),
-    StructField("error", StructType(Seq(StructField("message", StringType))))))
-
-  /** B3+B4 — parse raw API JSON bodies, drop error/incomplete responses
-    * (consumer:39-50), extract the nested fields (consumer:51-60). Input:
-    * (body string) column; output: weather columns. Pure Catalyst
-    * (`from_json` + dotted paths) — used by tests and any replay path where
-    * responses were captured raw. */
-  def parseWeatherJson(df: DataFrame, bodyCol: String): DataFrame =
-    df.withColumn("w", from_json(col(bodyCol), weatherResponseSchema))
-      .filter(col("w.error").isNull &&
-        col("w.location").isNotNull && col("w.current").isNotNull)
-      .select(df.columns.map(col) ++ Seq(
-        col("w.location.name").as("locale"),
-        col("w.location.region").as("region"),
-        col("w.location.country").as("country"),
-        col("w.current.condition.text").as("condition"),
-        col("w.current.temp_f").as("temp_f"),
-        col("w.current.wind_mph").as("wind_mph"),
-        col("w.current.wind_dir").as("wind_dir")): _*)
 
   /** B2+B5 — enrich positions via the client, one client + LRU cell-cache per
     * partition; flatten location.{lat,lon} to top-level (consumer:72-87).

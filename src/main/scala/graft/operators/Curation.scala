@@ -291,7 +291,7 @@ object Curation {
   val Pq = PqShape(m = 16, subDim = 4, codebookK = 64)
 
   /** PQ-ADC approximate nearest neighbors — the third ANN scale path beside
-    * LSH ([[Similarity.annLsh]]) and IVF ([[Similarity.annIvf]]): vectors are
+    * LSH ([[Similarity.annLsh]]) and IVF ([[Similarity.annIvfSqrt]]): vectors are
     * encoded as M nearest-sub-centroid codes against a per-subspace codebook
     * (the deterministic first-`codebookK` vectors standing in for trained
     * k-means — FIXED size, as real PQ codebooks are: encode cost stays
@@ -307,7 +307,7 @@ object Curation {
   /** PQ encode + reconstruct: every vector's M nearest-sub-centroid codes
     * against the deterministic per-subspace codebook, returned as the
     * concatenated-centroid reconstruction (vec_id, rv). Shared by [[pqAdc]]
-    * (full-corpus ADC) and [[ivfPq]] (cell-pruned ADC). */
+    * (full-corpus ADC) and [[ivfPqSqrt]] (cell-pruned ADC). */
   def pqReconstruct(e: DataFrame, m: Int, subDim: Int,
       codebookK: Int): DataFrame = {
     val v = e.select(col("vec_id"), Vec.toDouble(col("embedding")).as("v"))
@@ -404,15 +404,7 @@ object Curation {
     * FAISS-style index layout for billion-vector corpora. At 100 TB both
     * codebooks broadcast, the corpus is encoded in one linear pass, and a
     * query touches |corpus| * nProbe / nCells reconstructions instead of all
-    * of them. */
-  def ivfPq(e: DataFrame, stride: Int, nProbe: Int, m: Int, subDim: Int,
-      codebookK: Int, k: Int): DataFrame = {
-    val c = Similarity.withNorm(e)
-    ivfPqCents(c, Similarity.coarseCentroids(c, stride),
-      pqReconstruct(e, m, subDim, codebookK), nProbe, k)
-  }
-
-  /** [[ivfPq]] under the √n IVF sizing law
+    * of them. The coarse cells follow the √n IVF sizing law
     * ([[Similarity.coarseCentroidsSqrt]]). */
   def ivfPqSqrt(e: DataFrame, nProbe: Int, m: Int, subDim: Int,
       codebookK: Int, k: Int): DataFrame = {
@@ -438,9 +430,9 @@ object Curation {
       .filter(col("rank") <= k)
   }
 
-  /** DuckDB replica of [[ivfPq]]: the coarse-cell CTEs of the IVF oracle
-    * fused with the PQ-reconstruction CTEs of [[pqOracle]]. */
-  private def ivfPqOracle(stride: String, nProbe: Int, m: Int, subDim: Int,
+  /** DuckDB replica of [[ivfPqSqrt]]: the coarse-cell CTEs of the IVF
+    * oracle fused with the PQ-reconstruction CTEs of [[pqOracle]]. */
+  private def ivfPqOracle(nProbe: Int, m: Int, subDim: Int,
       codebookK: Int, k: Int): String = {
     val dot = Similarity.dotSql
     val sq = "list_sum(list_transform(list_zip(%s, %s), " +
@@ -450,7 +442,7 @@ object Curation {
                    FROM embeddings),
         n AS (SELECT vec_id, v, sqrt(${dot.format("v", "v")}) AS nrm FROM e),
         cents AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM n
-                  WHERE vec_id % $stride = 0),
+                  WHERE vec_id % ${Similarity.sqrtStrideSql} = 0),
         simc AS (SELECT n.vec_id, c_id,
                         ${Num.sql(dot.format("v", "cv") + " / (nrm * cn)", 6)} AS csim
                  FROM n CROSS JOIN cents),
@@ -491,8 +483,7 @@ object Curation {
   val ivfPqQ = QueryDef(
     "ann_ivf_pq",
     "IVF-PQ: 3-probe √n coarse cells + PQ-ADC rank (the FAISS-style composition)",
-    Some(ivfPqOracle(stride = Similarity.sqrtStrideSql, nProbe = 3, Pq.m,
-      Pq.subDim, Pq.codebookK, k = 10)),
+    Some(ivfPqOracle(nProbe = 3, Pq.m, Pq.subDim, Pq.codebookK, k = 10)),
     (s, dir) => ivfPqSqrt(Tables.embeddings(s, dir), nProbe = 3,
       Pq.m, Pq.subDim, Pq.codebookK, k = 10))
 

@@ -182,7 +182,7 @@ object Eval {
     * labeled corpus, here eating the engine's own `ann_cosine_topk` ranking.
     *
     * Scale design: the ranking pass is [[Similarity.annBruteForce]] (queries
-    * broadcast, corpus scanned once — swap in annLsh/annIvf candidates for a
+    * broadcast, corpus scanned once — swap in annLsh/annIvfSqrt candidates for a
     * web-scale corpus; the metric code is ranking-agnostic). Everything
     * after the ranking is |Q|x10 rows, and the ideal-DCG side needs only the
     * per-label corpus totals (|labels| rows, broadcast) — no second corpus

@@ -27,15 +27,17 @@ object Similarity {
 
   /** Exact top-K most similar pairs across the corpus — brute force, i<j,
     * O(n²) in corpus size. This is the GROUND-TRUTH twin the bucketed paths
-    * ([[annLsh]], [[annIvf]], `Curation.pqAdc`/`ivfPq`) are graded against;
-    * it must never run on a full corpus, so reaching it requires the explicit
-    * `allowQuadratic = true` opt-in. For production pair search, generate
-    * candidates with a bucketed method and exact-rank only those. */
+    * ([[annLsh]], [[annIvfSqrt]], `Curation.pqAdc`/`ivfPqSqrt`) are graded
+    * against; it must never run on a full corpus, so reaching it requires
+    * the explicit `allowQuadratic = true` opt-in. For production pair
+    * search, generate candidates with a bucketed method and exact-rank only
+    * those. */
   def topKPairs(e: DataFrame, k: Int,
       allowQuadratic: Boolean = false): DataFrame = {
     require(allowQuadratic,
       "topKPairs is the O(n²) oracle baseline; pass allowQuadratic = true " +
-        "only on a bounded corpus, or use annLsh/annIvf candidates instead")
+        "only on a bounded corpus, or use annLsh/annIvfSqrt candidates " +
+        "instead")
     val n = withNorm(e)
     n.as("a").join(n.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"),
@@ -102,13 +104,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** IVF (inverted-file) ANN — the other scale path besides LSH: coarse-
-    * quantize the corpus into cells around deterministic centroids (every
-    * `stride`-th vector by id — a seeded sample standing in for trained
-    * k-means; the Spark-side plumbing is identical), then each query probes
-    * only its `nProbe` nearest cells. Corpus vectors live in exactly one
-    * cell, so probing never duplicates candidates. Centroids broadcast;
-    * the corpus never shuffles. */
   /** Argmax ordering key (csim DESC, c_id ASC) PACKED into one long:
     * round(csim·1e6)·2⁴² + (2⁴²−1−c_id). The r9 plan sweep accepted 8
     * embedding-family SortAggregates because `max_by(c_id, struct(csim,
@@ -168,12 +163,8 @@ object Similarity {
   }
 
   /** Strided deterministic coarse centroids (vec_id % stride == 0) with
-    * precomputed norms — the IVF codebook stand-in. */
-  private[graft] def coarseCentroids(c: DataFrame, stride: Int): DataFrame =
-    c.filter(pmod(col("vec_id"), lit(stride)) === 0)
-      .select(cellId(col("vec_id")).as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-
-  /** IVF sizing law for the catalog's INDEX queries: stride = max(25,
+    * precomputed norms — the IVF codebook stand-in — under the IVF sizing
+    * law for the catalog's INDEX queries: stride = max(25,
     * floor(√n)), so the cell count tracks √n — the standard IVF regime
     * (FAISS guidance is k ∝ √n cells). The alternative the r10 sf10 sweep
     * measured — a fixed stride, cells ∝ n — is the wrong asymptote for an
@@ -183,9 +174,10 @@ object Similarity {
     * (no driver action — catalog registration stays lazy without a
     * Deferred wrapper), deterministic cross-engine (IEEE sqrt of an exact
     * integer, floored, in both Spark codegen and DuckDB — see
-    * [[sqrtStrideSql]]). k-means keeps a literal stride (k is a model
-    * hyperparameter, not an index size). SemDeDup and the scorecard's
-    * outlier leg moved onto this law in r12: their fixed stride kept
+    * [[sqrtStrideSql]]). k-means seeds follow their own fixed-k law
+    * ([[kmeansUpdateFixedK]]): k is a model hyperparameter, not an index
+    * size. SemDeDup and the scorecard's outlier leg moved onto this law in
+    * r12: their fixed stride kept
     * within-cell work bounded but left the ASSIGNMENT at O(n²/stride) —
     * the sf10 bench measured it — and √n cells improve the method's
     * cross-cell recall trade at the same time (see [[semDedupSqrt]]). */
@@ -215,21 +207,18 @@ object Similarity {
       .drop("cv", "cn", "csim", "crank")
   }
 
-  def annIvf(queries: DataFrame, corpus: DataFrame, stride: Int,
-      nProbe: Int, k: Int): DataFrame = {
-    val c = withNorm(corpus)
-    annIvfCents(queries, c, coarseCentroids(c, stride), nProbe, k)
-  }
-
-  /** [[annIvf]] under the √n sizing law ([[coarseCentroidsSqrt]]). */
+  /** IVF (inverted-file) ANN — the other scale path besides LSH: coarse-
+    * quantize the corpus into cells around deterministic centroids (every
+    * stride-th vector by id under the √n sizing law,
+    * [[coarseCentroidsSqrt]] — a seeded sample standing in for trained
+    * k-means; the Spark-side plumbing is identical), then each query probes
+    * only its `nProbe` nearest cells. Corpus vectors live in exactly one
+    * cell, so probing never duplicates candidates. Centroids broadcast;
+    * the corpus never shuffles. */
   def annIvfSqrt(queries: DataFrame, corpus: DataFrame,
       nProbe: Int, k: Int): DataFrame = {
     val c = withNorm(corpus)
-    annIvfCents(queries, c, coarseCentroidsSqrt(c), nProbe, k)
-  }
-
-  private def annIvfCents(queries: DataFrame, c: DataFrame, cents: DataFrame,
-      nProbe: Int, k: Int): DataFrame = {
+    val cents = coarseCentroidsSqrt(c)
     val cells = assignCells(c, cents)
     val q = probeCells(withNorm(queries), cents, "vec_id", nProbe)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
@@ -408,9 +397,9 @@ object Similarity {
           FROM sims) WHERE rank <= $k"""
   }
 
-  /** DuckDB replica of [[annIvf]]: same deterministic centroids (every
-    * stride-th vector; `stride` is a SQL expression so the √n law can pass
-    * [[sqrtStrideSql]]), same rounded cell ranking, same candidate rank.
+  /** DuckDB replica of [[annIvfSqrt]]: same deterministic centroids (every
+    * [[sqrtStrideSql]]-th vector), same rounded cell ranking, same
+    * candidate rank.
     * Cell assignment is an AGGREGATION over narrow (vec_id, c_id, csim)
     * rows, packed into ONE BIGINT exactly like the engine's [[packArgmax]]
     * (shifted +1e6 so the key stays non-negative and plain `%` decodes):
@@ -423,12 +412,12 @@ object Similarity {
     * OOM-killing a 125 GB host at sf10's 89.6M — the r11 sweep's one
     * blow-up). Only the nProbe ranking keeps a window, restricted to the 5
     * query vectors; vectors re-join by key. */
-  private def ivfOracle(stride: String, nProbe: Int, k: Int): String =
+  private def ivfOracle(nProbe: Int, k: Int): String =
     s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                    FROM embeddings),
         n AS (SELECT vec_id, v, sqrt(${dotSql.format("v", "v")}) AS nrm FROM e),
         cents AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM n
-                  WHERE vec_id % $stride = 0),
+                  WHERE vec_id % $sqrtStrideSql = 0),
         sim AS (SELECT n.vec_id, c_id,
                        ${Num.sql(dotSql.format("v", "cv") + " / (nrm * cn)", 6)} AS csim
                 FROM n CROSS JOIN cents),
@@ -465,7 +454,7 @@ object Similarity {
   val annIvfQ = QueryDef(
     "ann_ivf_cells",
     "approximate top-10 neighbors via IVF coarse quantization (3-probe, √n cells)",
-    Some(ivfOracle(stride = sqrtStrideSql, nProbe = 3, k = 10)),
+    Some(ivfOracle(nProbe = 3, k = 10)),
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
       annIvfSqrt(e.filter(col("vec_id") < 5), e, nProbe = 3, k = 10)
@@ -473,40 +462,34 @@ object Similarity {
 
   /** One Lloyd iteration of k-means as a DataFrame transform: assign every
     * vector to its nearest centroid (broadcast, rounded-cosine argmax with
-    * id tiebreak — the same deterministic cell assignment as [[annIvf]]),
-    * then recompute per-cell means dimension-wise. At 100 TB the corpus
-    * never shuffles for assignment (centroids broadcast); the mean update is
-    * one groupBy over (cell, dim). Long output shape (c_id, pos, mean). */
-  def kmeansUpdate(e: DataFrame, stride: Int): DataFrame = {
-    val c = withNorm(e)
-    val cents = c.filter(pmod(col("vec_id"), lit(stride)) === 0)
-      .select(cellId(col("vec_id")).as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    kmeansUpdateCents(c, cents)
-  }
-
-  /** [[kmeansUpdate]] under the fixed-k seed law ([[kmeansStrideSql]]):
-    * stride = max(25, ceil(n/64)), so k saturates at ~64 clusters however
-    * large the corpus — k is a MODEL hyperparameter, not a function of
-    * corpus size (the r10 sf10 sweep measured the alternative: seeds ∝
-    * n/25 made the oracle's assignment join n²·d/25 — 10¹¹ rows at 200k
-    * vectors). In-plan like [[coarseCentroidsSqrt]]; /64.0 is a power-of-
-    * two division, exact in both engines, so the ceil is deterministic. */
+    * id tiebreak — the same deterministic cell assignment as
+    * [[annIvfSqrt]]), then recompute per-cell means dimension-wise. At
+    * 100 TB the corpus never shuffles for assignment (centroids broadcast);
+    * the mean update is one groupBy over (cell, dim). Long output shape
+    * (c_id, pos, mean). Seeds follow the fixed-k law ([[kmeansStride]]). */
   def kmeansUpdateFixedK(e: DataFrame): DataFrame = {
     val c = withNorm(e)
-    val cents = c.crossJoin(broadcast(c.agg(greatest(lit(25L),
-        ceil(count(lit(1)) / lit(64.0)).cast("long")).as("km_stride"))))
+    val cents = c.crossJoin(broadcast(kmeansStride(c)))
       .filter(pmod(col("vec_id"), col("km_stride")) === 0)
       .select(cellId(col("vec_id")).as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    kmeansUpdateCents(c, cents)
-  }
-
-  private def kmeansUpdateCents(c: DataFrame, cents: DataFrame): DataFrame =
     assignCells(c, cents)
       .select(col("c_id"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("c_id"), col("pos").cast("long").as("pos"))
       .agg(count(lit(1)).as("n_members"), Num.pround(avg(col("x")), 6).as("mean_x"))
+  }
 
-  /** DuckDB twin of the fixed-k seed stride. */
+  /** The fixed-k seed law as a one-row `km_stride` column over `e`: stride
+    * = max(25, ceil(n/64)), so k saturates at ~64 clusters however large
+    * the corpus — k is a MODEL hyperparameter, not a function of corpus
+    * size (the r10 sf10 sweep measured the alternative: seeds ∝ n/25 made
+    * the oracle's assignment join n²·d/25 — 10¹¹ rows at 200k vectors).
+    * In-plan like [[coarseCentroidsSqrt]]; /64.0 is a power-of-two
+    * division, exact in both engines, so the ceil is deterministic. */
+  private[graft] def kmeansStride(e: DataFrame): DataFrame =
+    e.agg(greatest(lit(25L), ceil(count(lit(1)) / lit(64.0)).cast("long"))
+      .as("km_stride"))
+
+  /** DuckDB twin of [[kmeansStride]]. */
   private[graft] val kmeansStrideSql =
     "(SELECT greatest(25, CAST(ceil(count(*) / 64.0) AS BIGINT)) FROM embeddings)"
 
@@ -721,8 +704,9 @@ object Similarity {
 
   /** SemDeDup (Abbas et al. 2023's cluster-then-dedup shape): coarse-cluster
     * the embedding corpus (the same deterministic strided codebook + rounded
-    * argmax assignment as [[annIvf]]), then run the cosine >= tau duplicate
-    * scan only WITHIN each cell — the all-pairs product never happens.
+    * argmax assignment as [[annIvfSqrt]]), then run the cosine >= tau
+    * duplicate scan only WITHIN each cell — the all-pairs product never
+    * happens.
     * Verdict per vector: kept unless an earlier (lower-id) vector in the
     * SAME cell sits within tau; dropped vectors carry their earliest
     * witness. Cross-cell near-dups are the method's documented recall trade
@@ -732,15 +716,11 @@ object Similarity {
     * Scale (100 TB): centroids broadcast, the corpus shuffles once by cell,
     * candidate work is Σ|cell|² — bounded by codebook granularity, so
     * oversized cells are re-clustered (finer stride) rather than scanned;
-    * the verdict join is a per-cell equi-join, never global. */
-  def semDedup(e: DataFrame, stride: Int, tau: Double): DataFrame = {
-    val c = withNorm(e)
-    semDedupCells(c, coarseCentroids(c, stride), tau)
-  }
-
-  /** [[semDedup]] under the √n IVF sizing law ([[coarseCentroidsSqrt]]):
-    * the catalog's default. √n cells cut the broadcast-assignment dots from
-    * O(n²/stride) to O(n^1.5·d) — the r12 sf10 bench measured the fixed
+    * the verdict join is a per-cell equi-join, never global.
+    *
+    * The codebook follows the √n IVF sizing law ([[coarseCentroidsSqrt]]):
+    * √n cells cut the broadcast-assignment dots from O(n²/stride) to
+    * O(n^1.5·d) — the r12 sf10 bench measured the fixed
     * stride-25 codebook at 1.6e9 assignment dots for 200k vectors — and the
     * within-cell scan grows to the SAME O(n·√n) (expected cell size √n), so
     * both phases share one asymptote. Recall only improves: fewer, larger
@@ -749,14 +729,9 @@ object Similarity {
     * once n > stride². */
   def semDedupSqrt(e: DataFrame, tau: Double): DataFrame = {
     val c = withNorm(e)
-    semDedupCells(c, coarseCentroidsSqrt(c), tau)
-  }
-
-  private def semDedupCells(c: DataFrame, cents: DataFrame,
-      tau: Double): DataFrame = {
     // cached: feeds both sides of the pair scan AND the verdict base —
     // without it the broadcast-assign subtree runs three times
-    val cells = assignCells(c, cents).cache()
+    val cells = assignCells(c, coarseCentroidsSqrt(c)).cache()
     val a = cells.select(col("c_id"), col("vec_id").as("i"),
       col("v").as("vi"), col("nrm").as("ni"))
     val b = cells.select(col("c_id"), col("vec_id").as("j"),
@@ -783,8 +758,8 @@ object Similarity {
     * step reshapes them to array form IN-PLAN (collect_list sorted by
     * position — d·k rows, a trivial aggregate) so the assignment runs the
     * codegen'd DotProduct against the BROADCAST centroid array, exactly
-    * like [[kmeansUpdate]]; the corpus never shuffles for assignment, and
-    * the mean update is the only per-step wide exchange (by (cell, pos)).
+    * like [[kmeansUpdateFixedK]]; the corpus never shuffles for assignment,
+    * and the mean update is the only per-step wide exchange (by (cell, pos)).
     * Per-step means are ORDER-FREE ([[Num.qsum]] quantize-then-sum at
     * 12 dp, one division by the group count), then round to 9 places
     * intermediate / 6 final — so the centroid chain is bit-identical
@@ -792,27 +767,10 @@ object Similarity {
     * agrees-after-rounding (the latter broke at sf10 group sizes). Cells that attract no
     * vectors drop out — both engines aggregate only non-empty groups.
     * Zero-norm vectors and zero-norm centroids are excluded (direction
-    * undefined), mirroring `embedding_quantize`'s guard. */
-  def kmeansIterate(e: DataFrame, stride: Int, steps: Int): DataFrame =
-    kmeansIterateSeeds(e, _.filter(pmod(col("vec_id"), lit(stride)) === 0),
-      steps)
-
-  /** [[kmeansIterate]] under the fixed-k seed law (see
-    * [[kmeansUpdateFixedK]]); the seed stride comes from a broadcast
-    * one-row count over the FULL corpus (matching the oracle's
-    * `count(*) FROM embeddings`). */
+    * undefined), mirroring `embedding_quantize`'s guard. Seeds follow the
+    * fixed-k law ([[kmeansStride]]), counted over the FULL corpus (matching
+    * the oracle's `count(*) FROM embeddings`). */
   def kmeansIterateFixedK(e: DataFrame, steps: Int): DataFrame = {
-    val strideDf = e.agg(greatest(lit(25L),
-      ceil(count(lit(1)) / lit(64.0)).cast("long")).as("km_stride"))
-    kmeansIterateSeeds(e,
-      _.crossJoin(broadcast(strideDf))
-        .filter(pmod(col("vec_id"), col("km_stride")) === 0)
-        .drop("km_stride"),
-      steps)
-  }
-
-  private def kmeansIterateSeeds(e: DataFrame,
-      seeds: DataFrame => DataFrame, steps: Int): DataFrame = {
     val va = withNorm(e).filter(col("nrm") > 0).cache()
     // r16 note: re-deriving this long format per step (join the 1x array
     // table, explode after) was A/B'd at sf1 and LOST 1.6x (3.40 -> 5.40 s)
@@ -821,7 +779,9 @@ object Similarity {
     val ev = va.select(col("vec_id"), posexplode(col("v")).as(Seq("p", "x")))
       .select(col("vec_id"), (col("p") + 1).cast("long").as("pos"), col("x"))
       .cache()
-    var cents = seeds(ev)
+    var cents = ev.crossJoin(broadcast(kmeansStride(e)))
+      .filter(pmod(col("vec_id"), col("km_stride")) === 0)
+      .drop("km_stride")
       .select(col("vec_id").as("c_id"), col("pos"), col("x").as("m"))
     for (k <- 1 to steps) {
       // reshape the step's centroid DataFrame back to array form IN-PLAN
@@ -916,25 +876,14 @@ object Similarity {
     * mis-embedded/out-of-domain candidates a curation pipeline reviews
     * before training. One broadcast-assign pass + one 1-row stats aggregate
     * that broadcasts back — linear, no pair join, same scale contract as
-    * [[annIvf]]'s assignment. The packed argmax key ([[packArgmax]]) carries
-    * (csim, -c_id) in one long so the distance AND the deterministic cell
-    * come from one fixed-width max — a HashAggregate, where the former
-    * struct-max forced a corpus×k SortAggregate (r10 A/B). */
-  def embeddingOutliers(e: DataFrame, stride: Int,
-      zThresh: Double): DataFrame = {
-    val c = withNorm(e)
-    embeddingOutliersCents(c, coarseCentroids(c, stride), zThresh)
-  }
-
-  /** [[embeddingOutliers]] under the √n IVF sizing law. */
+    * [[annIvfSqrt]]'s assignment, on the same √n codebook. The packed
+    * argmax key ([[packArgmax]]) carries (csim, -c_id) in one long so the
+    * distance AND the deterministic cell come from one fixed-width max — a
+    * HashAggregate, where the former struct-max forced a corpus×k
+    * SortAggregate (r10 A/B). */
   def embeddingOutliersSqrt(e: DataFrame, zThresh: Double): DataFrame = {
     val c = withNorm(e)
-    embeddingOutliersCents(c, coarseCentroidsSqrt(c), zThresh)
-  }
-
-  private def embeddingOutliersCents(c: DataFrame, cents: DataFrame,
-      zThresh: Double): DataFrame = {
-    val best = c.join(broadcast(cents), lit(true))
+    val best = c.join(broadcast(coarseCentroidsSqrt(c)), lit(true))
       .select(col("vec_id"), packArgmax(
         Num.pround(Vec.cosinePrenormed(
           Vec.dot(col("v"), col("cv")), col("nrm"), col("cn")), 6),

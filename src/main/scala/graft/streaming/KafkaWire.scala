@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.ais.{AvroCodec, PinnedRegistry, PositionEvent, ShipInfoEvent}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import graft.ais.{AvroCodec, PinnedRegistry}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, Trigger}
 
@@ -89,16 +89,6 @@ object KafkaWire {
       .option("kafka.bootstrap.servers", ep.bootstrapServers)
       .option("topic", ep.topic)
       .options((ProducerDefaults ++ ep.extra).map { case (k, v) => (s"kafka.$k", v) })
-
-  /** Kafka source batch/stream → typed positions: unframe + Avro-decode the
-    * value column, dropping malformed frames (B1's FAILFAST analog — a frame
-    * that does not parse against the pinned schema never reaches the table). */
-  def positions(kafka: DataFrame): Dataset[PositionEvent] =
-    AvroCodec.positionsFromWire(kafka)
-
-  /** Kafka source batch/stream → typed ship info. */
-  def shipInfo(kafka: DataFrame): Dataset[ShipInfoEvent] =
-    AvroCodec.shipInfoFromWire(kafka)
 
   /** The deploy topology in one call: decoded AIS branches → the reference's
     * two topics (README.md:197-200 — positions plain, info compacted; topic

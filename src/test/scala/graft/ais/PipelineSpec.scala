@@ -118,17 +118,16 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("B3: malformed / error / incomplete weather JSON rows are dropped") {
-    import spark.implicits._
     val bodies = Seq(
       """{"location":{"name":"Bergen","region":"Vestland","country":"Norway"},
          "current":{"condition":{"text":"Rain"},"temp_f":44.1,"wind_mph":9.8,"wind_dir":"SW"}}""",
       """{"error":{"message":"quota"}}""",
       """{"location":{"name":"x","region":"y","country":"z"}}""",
       """not json at all""")
-    val out = Enrich.parseWeatherJson(bodies.toDF("body"), "body").collect()
+    val out = bodies.flatMap(new HttpWeatherClient("k").parse)
     assert(out.length == 1)
-    assert(out.head.getAs[String]("locale") == "Bergen")
-    assert(out.head.getAs[Double]("temp_f") == 44.1)
+    assert(out.head.locale == "Bergen")
+    assert(out.head.temp_f == 44.1)
   }
 
   test("D1/D2: ship counts, exact and speed-filtered (console.py:34-42)") {

@@ -67,7 +67,7 @@ class RegistrySpec extends SparkSpec {
       evolvedFrame(p2),                                         // evolved producer
       AvroCodec.frame(1234, Array[Byte](1, 2, 3)))              // unregistered id
     val wire = frames.map(Tuple1(_)).toDF("value")
-    val got = RegistryDecode.positionsFromWire(wire, fakeRegistry).collect().toSet
+    val got = AvroCodec.positionsFromWire(wire, fakeRegistry).collect().toSet
     // field reorder + appended default field resolve; unknown id drops
     assert(got == Set(p1, p2))
   }
@@ -76,13 +76,18 @@ class RegistrySpec extends SparkSpec {
     import spark.implicits._
     val wire = Seq(Tuple1(AvroCodec.positionToBytes(p1, PinnedRegistry.PositionId)))
       .toDF("value")
-    assert(RegistryDecode.positionsFromWire(wire, PinnedRegistry).collect().toSeq ==
+    assert(AvroCodec.positionsFromWire(wire, PinnedRegistry).collect().toSeq ==
       AvroCodec.positionsFromWire(wire).collect().toSeq)
-    // but the evolved frame needs the registry: the pinned-only path drops it
+    assert(AvroCodec.positionsFromWire(wire).collect().toSeq == Seq(p1))
+    // but the evolved id-99 frame needs a registry that knows it: the
+    // default drops it, the evolved registry decodes it
     val evolvedWire = Seq(Tuple1(evolvedFrame(p2))).toDF("value")
     assert(AvroCodec.positionsFromWire(evolvedWire).isEmpty)
-    assert(RegistryDecode.positionsFromWire(evolvedWire, fakeRegistry)
+    assert(AvroCodec.bytesToPosition(evolvedFrame(p2)).isEmpty)
+    assert(AvroCodec.positionsFromWire(evolvedWire, fakeRegistry)
       .collect().toSeq == Seq(p2))
+    assert(AvroCodec.bytesToPosition(evolvedFrame(p2), fakeRegistry)
+      .contains(p2))
   }
 
   test("ship info path resolves by id too") {
@@ -91,13 +96,13 @@ class RegistrySpec extends SparkSpec {
       "cargo ship", "ROTTERDAM")
     val wire = Seq(Tuple1(AvroCodec.shipInfoToBytes(e, PinnedRegistry.ShipInfoId)))
       .toDF("value")
-    assert(RegistryDecode.shipInfoFromWire(wire, PinnedRegistry).collect().toSeq ==
+    assert(AvroCodec.shipInfoFromWire(wire, PinnedRegistry).collect().toSeq ==
       Seq(e))
     // an info frame under an id registered to the POSITION schema must not
     // mis-decode: resolution is by id, and a body that cannot parse drops
     val cross = Seq(Tuple1(AvroCodec.shipInfoToBytes(e, PinnedRegistry.PositionId)))
       .toDF("value")
-    assert(RegistryDecode.shipInfoFromWire(cross, PinnedRegistry).count() == 0L)
+    assert(AvroCodec.shipInfoFromWire(cross, PinnedRegistry).count() == 0L)
   }
 
   test("the pinned decode reads only its own schema id: a ship-info frame " +

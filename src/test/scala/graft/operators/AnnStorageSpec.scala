@@ -15,7 +15,7 @@ class AnnStorageSpec extends SparkSpec {
   test("IVF cell-partitioned store: a query touches only its nProbe partitions") {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val c = Similarity.withNorm(emb)
-    val cents = Similarity.coarseCentroids(c, stride = 25)
+    val cents = Similarity.coarseCentroidsSqrt(c)
     val cells = Similarity.assignCells(c, cents).cache()
     try {
       val dir = java.nio.file.Files.createTempDirectory("ivf-store").toString

@@ -102,7 +102,7 @@ class CurationSpec extends SparkSpec {
     val full = Curation.pqAdc(emb, m = 16, subDim = 4, codebookK = 64, k = 10)
       .select(col("q_id"), col("vec_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pruned = Curation.ivfPq(emb, stride = 25, nProbe = 3,
+    val pruned = Curation.ivfPqSqrt(emb, nProbe = 3,
       m = 16, subDim = 4, codebookK = 64, k = 10).cache()
     try {
       val rows = pruned.select(col("q_id"), col("vec_id"), col("rank"))

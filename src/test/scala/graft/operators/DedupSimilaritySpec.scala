@@ -247,7 +247,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val full = Similarity.annBruteForce(queries, emb, Int.MaxValue)
       .select(col("q_id"), col("vec_id"), col("cosine")).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val ivf = Similarity.annIvf(queries, emb, stride = 25, nProbe = 3, k = 10)
+    val ivf = Similarity.annIvfSqrt(queries, emb, nProbe = 3, k = 10)
       .select(col("q_id"), col("vec_id"), col("cosine")).collect()
     assert(ivf.nonEmpty)
     ivf.foreach { r =>
@@ -370,11 +370,24 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(got.nonEmpty && got.size < full.size) // a strict, non-empty slice
   }
 
-  test("kmeansIterate step 1 equals the array-form kmeansUpdate means " +
-      "(long-format vs broadcast-array implementations cross-validate)") {
-    val it = Similarity.kmeansIterate(emb, stride = 25, steps = 1)
+  test("the sizing laws pick stride 25 on sf0.001's 500 vectors: 20 IVF " +
+      "cells and 20 k-means seeds, the codebook the index tests check") {
+    assert(emb.count() == 500L)
+    val every25th = (0L until 500L by 25L).toSeq
+    val cells = Similarity.coarseCentroidsSqrt(Similarity.withNorm(emb))
+      .select(col("c_id")).collect().map(_.getLong(0)).sorted.toSeq
+    assert(cells == every25th)
+    assert(Similarity.kmeansStride(emb).head().getLong(0) == 25L)
+    val seeds = Similarity.kmeansUpdateFixedK(emb).select(col("c_id"))
+      .distinct().collect().map(_.getLong(0)).sorted.toSeq
+    assert(seeds == every25th)
+  }
+
+  test("kmeansIterateFixedK step 1 equals the array-form kmeansUpdateFixedK " +
+      "means (long-format vs broadcast-array implementations cross-validate)") {
+    val it = Similarity.kmeansIterateFixedK(emb, steps = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val up = Similarity.kmeansUpdate(emb, stride = 25)
+    val up = Similarity.kmeansUpdateFixedK(emb)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
     assert(it == up)
     assert(it.nonEmpty)
@@ -382,7 +395,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("embedding outliers: flags are exactly dist > mean + 1*stddev, " +
       "distances are valid cosine distances, and some vectors flag") {
-    val rows = Similarity.embeddingOutliers(emb, stride = 25, zThresh = 1.0)
+    val rows = Similarity.embeddingOutliersSqrt(emb, zThresh = 1.0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getBoolean(3)))
     assert(rows.length == emb.count())
@@ -421,9 +434,9 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
-  test("semDedup verdicts match a per-cell brute force; dup_of is the " +
+  test("semDedupSqrt verdicts match a per-cell brute force; dup_of is the " +
       "earliest same-cell witness") {
-    val verdicts = Similarity.semDedup(emb, stride = 25, tau = 0.35)
+    val verdicts = Similarity.semDedupSqrt(emb, tau = 0.35)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getBoolean(2), r.getLong(3)))).toMap
     assert(verdicts.values.exists(!_._2))   // the corpus actually drops some
@@ -437,6 +450,7 @@ class DedupSimilaritySpec extends SparkSpec {
       val c = dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
       math.floor(c * 1e6 + 0.5) / 1e6
     }
+    // stride 25: the √n law's pick on these 500 vectors (pinned above)
     val cents = vecs.filter(_._1 % 25 == 0)
     val cellOf = vecs.map { case (id, v) =>
       id -> cents.map { case (cid, cv) => (cos(v, cv), -cid) }.zip(cents.map(_._1))

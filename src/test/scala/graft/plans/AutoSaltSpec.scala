@@ -42,23 +42,8 @@ class AutoSaltSpec extends SparkSpec {
   private def pairs(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
-  private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private def naivePairs(sql: String): Seq[(Long, Long)] = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == BlockRangeJoins)
-    try pairs(spark.sql(sql))
-    finally spark.experimental.extraOptimizations = saved
-  }
+  private def naivePairs(sql: String): Seq[(Long, Long)] =
+    withoutRules(BlockRangeJoins)(pairs(spark.sql(sql)))
 
   test("planted hot bin: trigger fires, salted plan is pair-identical " +
       "to the naive join at factors 4 and 8") {
@@ -237,11 +222,7 @@ class AutoSaltSpec extends SparkSpec {
       }
       out
     }
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == BlockRangeJoins)
-    val naive = try rowsOf(spark.sql(semiSql))
-    finally spark.experimental.extraOptimizations = saved
+    val naive = withoutRules(BlockRangeJoins)(rowsOf(spark.sql(semiSql)))
     assert(salted == naive,
       s"salted=${salted.size} naive=${naive.size} (duplicates would mean " +
         "the semi left side exploded)")

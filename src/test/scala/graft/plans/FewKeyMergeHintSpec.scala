@@ -16,16 +16,6 @@ class FewKeyMergeHintSpec extends SparkSpec {
 
   private val W = 1000L
 
-  private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** n rows spread over `bins` distinct W-bins. */
   private def binnedDf(n: Int, bins: Int, idBase: Long = 0L): DataFrame = {
     import spark.implicits._
@@ -140,7 +130,7 @@ class FewKeyMergeHintSpec extends SparkSpec {
       assert(hinted.contains("SortMergeJoin"), hinted)
       assert(!hinted.contains("ShuffledHashJoin"), hinted)
       val (unhinted, rowsOff) =
-        withConfValue("spark.graft.join.fewKeyMergeHint.enabled", "false")(run())
+        withConf("spark.graft.join.fewKeyMergeHint.enabled" -> "false")(run())
       assert(rows == rowsOff, "hint changed the join result")
       counterfactual(unhinted)
     }
@@ -170,7 +160,7 @@ class FewKeyMergeHintSpec extends SparkSpec {
       assert(hinted.contains("SortMergeJoin"), hinted)
       assert(!hinted.contains("ShuffledHashJoin"), hinted)
       val (unhinted, nOff) =
-        withConfValue("spark.graft.join.fewKeyMergeHint.enabled", "false")(run())
+        withConf("spark.graft.join.fewKeyMergeHint.enabled" -> "false")(run())
       assert(n == nOff, "hint changed the pair count")
       counterfactual(unhinted)
     }
@@ -182,14 +172,4 @@ class FewKeyMergeHintSpec extends SparkSpec {
     if (!unhinted.contains("ShuffledHashJoin"))
       cancel("unhinted plan has no ShuffledHashJoin, so there was nothing " +
         s"for the hint to prevent: $unhinted")
-
-  private def withConfValue[T](k: String, v: String)(body: => T): T = {
-    val saved = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body
-    finally saved match {
-      case Some(s) => spark.conf.set(k, s)
-      case None => spark.conf.unset(k)
-    }
-  }
 }

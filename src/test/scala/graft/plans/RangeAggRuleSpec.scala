@@ -44,15 +44,12 @@ class RangeAggRuleSpec extends SparkSpec {
     assert(isCollapsed(df), optimized(df).toString)
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // rule-off reference: drop BOTH range rules, let Catalyst nested-loop it
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved.filterNot(o =>
-      o == RewriteRangeAggToPrefix || o == BlockRangeJoins)
-    try {
+    withoutRules(RewriteRangeAggToPrefix, BlockRangeJoins) {
       val naive = spark.sql(aggSql).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == naive, s"rule=${got.size} naive=${naive.size}")
       assert(got.nonEmpty)
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 
   test("range_agg_prefix (a DataFrame join + groupBy) collapses to the " +
@@ -65,16 +62,13 @@ class RangeAggRuleSpec extends SparkSpec {
     assert(isCollapsed(df), optimized(df).toString)
     val got = rows(df)
     // rule-off reference: drop BOTH range rules, let Catalyst nested-loop it
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved.filterNot(o =>
-      o == RewriteRangeAggToPrefix || o == BlockRangeJoins)
-    try {
+    withoutRules(RewriteRangeAggToPrefix, BlockRangeJoins) {
       val naiveDf = q(spark, sf("sf0.001"))
       assert(!isCollapsed(naiveDf), optimized(naiveDf).toString)
       val naive = rows(naiveDf)
       assert(got == naive, s"rule=${got.size} naive=${naive.size}")
       assert(got.nonEmpty)
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 
   test("a collapsed aggregate over the parquet events table can be sorted: " +
@@ -194,17 +188,14 @@ class RangeAggRuleSpec extends SparkSpec {
     val df = spark.sql(avgSql)
     assert(isCollapsed(df), optimized(df).toString)
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved.filterNot(o =>
-      o == RewriteRangeAggToPrefix || o == BlockRangeJoins)
-    try {
+    withoutRules(RewriteRangeAggToPrefix, BlockRangeJoins) {
       // sums at this SF stay far under 2^53, so Spark's double-buffer
       // Average is exact here and the comparison is equality, not tolerance
       val naive = spark.sql(avgSql).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(got == naive, s"rule=${got.size} naive=${naive.size}")
       assert(got.nonEmpty)
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 
   test("multi-window (1h + 24h) written as two joins collapses BOTH: two " +
@@ -252,15 +243,12 @@ class RangeAggRuleSpec extends SparkSpec {
     val df = spark.sql(strictSql)
     assert(isCollapsed(df), optimized(df).toString)
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved.filterNot(o =>
-      o == RewriteRangeAggToPrefix || o == BlockRangeJoins)
-    try {
+    withoutRules(RewriteRangeAggToPrefix, BlockRangeJoins) {
       val naive = spark.sql(strictSql).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == naive, s"rule=${got.size} naive=${naive.size}")
       assert(got.nonEmpty)
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 
   test("TIMESTAMP - INTERVAL aggregate SQL collapses to the prefix plan " +
@@ -284,15 +272,12 @@ class RangeAggRuleSpec extends SparkSpec {
     val viaUs = spark.sql(aggSql).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == viaUs, s"ts=${got.size} us=${viaUs.size}")
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved.filterNot(o =>
-      o == RewriteRangeAggToPrefix || o == BlockRangeJoins)
-    try {
+    withoutRules(RewriteRangeAggToPrefix, BlockRangeJoins) {
       val naive = spark.sql(tsAggSql).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == naive, s"rule=${got.size} naive=${naive.size}")
       assert(got.nonEmpty)
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 
   test("count(<scanned col>) collapses as the non-null count __z — and a " +

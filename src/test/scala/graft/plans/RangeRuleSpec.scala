@@ -43,10 +43,7 @@ class RangeRuleSpec extends SparkSpec {
            ON b.ts_us BETWEEN a.ts_us - 3600000000 AND a.ts_us"""
     val withRule = collectPairs(windowSql)
     val withRuleBetween = collectPairs(betweenSql)
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == BlockRangeJoins)
-    try {
+    withoutRules(BlockRangeJoins) {
       val naiveDf = spark.sql(windowSql)
       val np = naiveDf.queryExecution.executedPlan.toString
       assert(np.contains("BroadcastNestedLoopJoin") ||
@@ -56,7 +53,7 @@ class RangeRuleSpec extends SparkSpec {
       assert(withRule == naive,
         s"rule=${withRule.size} naive=${naive.size}")
       assert(withRuleBetween == naive)
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 
   test("negative timestamps: floor-div bins still cover every pair") {

@@ -32,23 +32,8 @@ class SpatialAutoSaltSpec extends SparkSpec {
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  private def naive(sql: String): Set[(Long, Long)] = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == BlockHaversineJoins)
-    try pairs(spark.sql(sql))
-    finally spark.experimental.extraOptimizations = saved
-  }
-
-  private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def naive(sql: String): Set[(Long, Long)] =
+    withoutRules(BlockHaversineJoins)(pairs(spark.sql(sql)))
 
   test("planted hot cell: salted plan fires and is pair-identical to the " +
       "naive join (factors 4 and 8)") {
@@ -216,11 +201,8 @@ class SpatialAutoSaltSpec extends SparkSpec {
     }
     assert(got.size == got.distinct.size,
       s"semi emitted duplicate left rows: ${got.size} vs ${got.distinct.size}")
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == BlockHaversineJoins)
-    val want = try spark.sql(semiSql).collect().map(_.getLong(0)).toSet
-    finally spark.experimental.extraOptimizations = saved
+    val want = withoutRules(BlockHaversineJoins)(
+      spark.sql(semiSql).collect().map(_.getLong(0)).toSet)
     assert(got.toSet == want)
   }
 

@@ -72,10 +72,7 @@ class SpatialRuleSpec extends SparkSpec {
     val withRule = spark.sql(radiusSql).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // drop the rule, replan the same SQL: Catalyst falls back to BNLJ
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == BlockHaversineJoins)
-    try {
+    withoutRules(BlockHaversineJoins) {
       val naiveDf = spark.sql(radiusSql)
       val np = naiveDf.queryExecution.executedPlan.toString
       assert(np.contains("BroadcastNestedLoopJoin") ||
@@ -85,7 +82,7 @@ class SpatialRuleSpec extends SparkSpec {
       assert(withRule == naive,
         s"rule=${withRule.size} naive=${naive.size} " +
           s"missing=${(naive -- withRule).take(5)} extra=${(withRule -- naive).take(5)}")
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 
   test("WHERE-clause form rewrites too (predicate pushed into the join first)") {
@@ -118,19 +115,16 @@ class SpatialRuleSpec extends SparkSpec {
         !p.contains("CartesianProduct"), p)
       assert(p.contains("__graft_cell"), p)
     }
-    val saved = spark.experimental.extraOptimizations
     def rows(sql: String): Set[(Long, Long)] = spark.sql(sql).collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     val (semiOn, antiOn) = (rows(semiSql), rows(antiSql))
     // semi + anti partition the table
     assert(semiOn.size + antiOn.size == total && (semiOn & antiOn).isEmpty)
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == BlockHaversineJoins)
-    try {
+    withoutRules(BlockHaversineJoins) {
       assert(rows(semiSql) == semiOn)
       assert(rows(antiSql) == antiOn)
       assert(semiOn.nonEmpty && antiOn.nonEmpty)
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 
   test("the rewrite composes with extra predicates and reversed sides") {
@@ -143,15 +137,12 @@ class SpatialRuleSpec extends SparkSpec {
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin") &&
       !p.contains("CartesianProduct"), p)
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == BlockHaversineJoins)
-    try {
+    withoutRules(BlockHaversineJoins) {
       val naive = spark.sql(q).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
       val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
       assert(got == naive)
       assert(got.nonEmpty)
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 }

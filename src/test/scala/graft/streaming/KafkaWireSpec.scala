@@ -99,10 +99,10 @@ class KafkaWireSpec extends SparkSpec {
       ms.addData(NmeaEncoder.staticVoyage(257000001L, "LAJX", "HAVFRUEN", 70,
         "BERGEN", 1700000100L): _*)
       qs.foreach(_.processAllAvailable())
-      assert(RegistryDecode.positionsFromWire(spark.table("kw_pos_wire"),
-        PinnedRegistry).collect().map(_.mmsi).toSeq == Seq("257000001"))
-      assert(RegistryDecode.shipInfoFromWire(spark.table("kw_info_wire"),
-        PinnedRegistry).collect().map(_.shipname).toSeq == Seq("HAVFRUEN"))
+      assert(AvroCodec.positionsFromWire(spark.table("kw_pos_wire"))
+        .collect().map(_.mmsi).toSeq == Seq("257000001"))
+      assert(AvroCodec.shipInfoFromWire(spark.table("kw_info_wire"))
+        .collect().map(_.shipname).toSeq == Seq("HAVFRUEN"))
     } finally qs.foreach(_.stop())
   }
 
@@ -117,7 +117,7 @@ class KafkaWireSpec extends SparkSpec {
     val wire = AvroCodec.positionsToWire(pos, PinnedRegistry.PositionId)
     assert(wire.schema.fields.map(f => f.name -> f.dataType.typeName).toSeq ==
       Seq("key" -> "string", "value" -> "binary"))
-    val back = KafkaWire.positions(wire).collect().toSet
+    val back = AvroCodec.positionsFromWire(wire).collect().toSet
     assert(back == pos.collect().toSet)
     // keys carry mmsi — the per-ship ordering contract (A10)
     assert(wire.select(col("key")).as[String].collect().toSet ==
@@ -126,11 +126,11 @@ class KafkaWireSpec extends SparkSpec {
     val info = Seq(ShipInfoEvent("244660180", 1700000000L, "EEMSLIFT ELLEN",
       "PCVB", "cargo ship", "ROTTERDAM")).toDS()
     val infoWire = AvroCodec.shipInfoToWire(info, PinnedRegistry.ShipInfoId)
-    val infoBack = KafkaWire.shipInfo(infoWire).collect().toSet
+    val infoBack = AvroCodec.shipInfoFromWire(infoWire).collect().toSet
     assert(infoBack == info.collect().toSet)
     // malformed frames drop instead of failing the batch
     val dirty = infoWire.union(
       Seq(("junk", Array[Byte](1, 2, 3))).toDF("key", "value"))
-    assert(KafkaWire.shipInfo(dirty).count() == 1L)
+    assert(AvroCodec.shipInfoFromWire(dirty).count() == 1L)
   }
 }
